@@ -71,25 +71,24 @@ def truncated_persist(df: DataFrame) -> DataFrame:
         replays computed rows, exactly like persist.
       * NOT pooled across invocations: a fresh operator call builds a
         fresh checkpoint, so repeated bench runs recompute from the
-        parquet inputs (``clearCache`` discipline unaffected — there
-        is nothing cross-run to clear).
+        parquet inputs. Its blocks DO outlive the call, and
+        ``spark.catalog.clearCache()`` does not free them (they are
+        RDD checkpoint blocks, not cached-table entries). Nothing here
+        releases them explicitly: they stay in the block manager until
+        the driver JVM garbage-collects the checkpointed RDD and
+        Spark's ContextCleaner drops its blocks.
       * Trade at scale: checkpointed partitions are NOT recomputable
         on executor loss (they replay from the stored blocks only) —
         the same documented trade as the components-loop
-        localCheckpoint. ``spark.etl_pack.lineage.truncate=false``
-        (conf) or ``ETL_PACK_LINEAGE_TRUNCATE=false`` (env) falls back
-        to :func:`pooled_persist` for recompute-preferring clusters.
+        localCheckpoint. The ``spark.etl_pack.lineage.truncate=false``
+        conf falls back to :func:`pooled_persist` for
+        recompute-preferring clusters.
       * Never use on a frame carrying an ``Observation`` — the
         CollectMetrics node disappears into the RDD and the metrics
         listener never fires (bm25's observed postings keep
         pooled_persist for exactly this reason).
     """
-    import os
-
-    flag = df.sparkSession.conf.get(
-        "spark.etl_pack.lineage.truncate",
-        os.environ.get("ETL_PACK_LINEAGE_TRUNCATE", "true"),
-    )
+    flag = df.sparkSession.conf.get("spark.etl_pack.lineage.truncate", "true")
     if str(flag).lower() in ("false", "0", "off"):
         return pooled_persist(df)
     return df.localCheckpoint(eager=False)

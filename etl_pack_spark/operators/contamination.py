@@ -342,6 +342,7 @@ def register_eval_set(
     import json as _json
     import time as _time
 
+    from etl_pack_spark.operators import guards
     from etl_pack_spark.operators.cache import pooled_persist
     from etl_pack_spark.sinks.fsio import exists, read_text, write_text
     from etl_pack_spark.streaming.incremental import _stamp_lease
@@ -369,7 +370,7 @@ def register_eval_set(
         if reg is not None:
             mine = reg.where(F.col("eval_set") == eval_set)
             if legacy:
-                if mine.limit(1).count():
+                if guards.bounded_count(mine, 0):
                     existing_n = default_n
             else:
                 row = mine.select("n").limit(1).collect()

@@ -29,6 +29,7 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_pack_spark.operators import guards
 from etl_pack_spark.operators.cache import pooled_persist as _pooled_persist
 
 _log = logging.getLogger(__name__)
@@ -182,7 +183,7 @@ def _drop_hot_buckets(rows: DataFrame, keys: list[str], cap: int) -> DataFrame:
     recomputing the cheap banding expressions from the cached
     signatures."""
     over = _pooled_persist(overfull_buckets(rows, keys, cap).drop("count"))
-    if over.limit(1).count() == 0:
+    if guards.bounded_count(over, 0) == 0:
         return rows
     _log.warning(
         "heavy-hitter cap engaged: %d bucket key(s) on %s exceed %d "
@@ -578,8 +579,7 @@ def ngram_jaccard_pairs(
     20+ min at the 5000-doc bench scale; the rewrite's measured wall
     is seconds). The brute-force plan is kept for ``threshold <= 0``,
     where a zero-intersection pair is a legitimate result."""
-    # limit(max+1) bounds the check to one cheap job, no full count
-    if len(df.select(id_col).limit(max_docs + 1).take(max_docs + 1)) > max_docs:
+    if guards.bounded_count(df.select(id_col), max_docs) > max_docs:
         raise ValueError(
             f"ngram_jaccard_pairs is an O(n^2) all-pairs baseline capped at "
             f"{max_docs} docs; use minhash_lsh_dedup_pairs for corpora this size"

@@ -20,10 +20,11 @@ is the right trade at any scale.)
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from etl_pack_spark.operators import guards
 
 # Bytes of (column-pruned, plan-estimated) input per spread partition
 # (r16, round-15 VERDICT #4): the r15 spread always widened to
@@ -34,40 +35,15 @@ from pyspark.sql import functions as F
 # defaultParallelism, so a 50 KB frame spreads a few ways, the sf0.1
 # fixtures still reach full width, and the 10x/30x probes are
 # unchanged. The floor is a LOCAL default calibrated on the fixture
-# sweep recorded in OPTIMIZATION_r16.md; production tunes it via
-# spark.etl_pack.spread.floorBytes (conf) or
-# ETL_PACK_SPREAD_FLOOR_BYTES (env) — it is a bytes-per-task knob like
-# spark.sql.files.maxPartitionBytes, not a core-count constant.
+# sweep recorded in OPTIMIZATION_r16.md; production tunes it via the
+# spark.etl_pack.spread.floorBytes conf — it is a bytes-per-task knob
+# like spark.sql.files.maxPartitionBytes, not a core-count constant.
 SPREAD_FLOOR_BYTES = 24 * 1024
 
 
 def _spread_floor_bytes(df: DataFrame) -> int:
-    conf = df.sparkSession.conf.get(
-        "spark.etl_pack.spread.floorBytes",
-        os.environ.get("ETL_PACK_SPREAD_FLOOR_BYTES", ""),
-    )
+    conf = df.sparkSession.conf.get("spark.etl_pack.spread.floorBytes", "")
     return int(conf) if conf else SPREAD_FLOOR_BYTES
-
-
-def _estimated_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for the (column-pruned) input — free
-    driver-side plan stats, no job. Unknown/huge estimates (opaque
-    lineage) saturate the width at defaultParallelism, which is the
-    pre-r16 behavior."""
-    stats = df._jdf.queryExecution().optimizedPlan().stats()
-    return int(str(stats.sizeInBytes()))
-
-
-def spread_width(df: DataFrame) -> int:
-    """The data-proportionate spread width (r16):
-    ``min(defaultParallelism, ceil(est_bytes / floor))``, never below
-    1. Raises whatever the underlying plan-stats access raises —
-    callers fall back to their conservative behavior."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    return min(
-        target,
-        max(1, math.ceil(_estimated_bytes(df) / _spread_floor_bytes(df))),
-    )
 
 
 def spread_small_scan(
@@ -76,7 +52,9 @@ def spread_small_scan(
     """Repartition by ``key_col`` only when the scan underuses the
     cluster (planned partitions < the data-proportionate width below).
     Falls back to repartitioning if the partition count cannot be
-    planned.
+    planned or the plan stats are unavailable. Unknown/huge size
+    estimates (opaque lineage) saturate the width at
+    defaultParallelism, the pre-r16 behavior.
 
     The spread pins an EXPLICIT partition count (r15): a keyed
     ``repartition(col)`` without one is an AQE-coalescible exchange,
@@ -98,12 +76,14 @@ def spread_small_scan(
     under-provisioned by any bytes-per-task sizing."""
     try:
         n_parts = df.rdd.getNumPartitions()
-        if full_width:
-            width = df.sparkSession.sparkContext.defaultParallelism
-        else:
-            width = spread_width(df)
     except Exception:  # noqa: BLE001 — conservative: keep fixture behavior
         return df.repartition(F.col(key_col))
+    width = df.sparkSession.sparkContext.defaultParallelism
+    if not full_width:
+        est = guards.estimated_bytes(df)
+        if est is None:
+            return df.repartition(F.col(key_col))
+        width = min(width, max(1, math.ceil(est / _spread_floor_bytes(df))))
     if n_parts < width:
         return df.repartition(width, F.col(key_col))
     return df

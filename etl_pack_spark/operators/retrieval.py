@@ -382,7 +382,7 @@ def _bm25_score_batch(
 
     q_terms = pooled_persist(q_terms)
     bound = guards.MAX_BROADCAST_MODEL_ROWS
-    small = q_terms.limit(bound + 1).count() <= bound
+    small = guards.bounded_count(q_terms, bound) <= bound
 
     def hint(frame: DataFrame) -> DataFrame:
         return F.broadcast(frame) if small else frame

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_pack_spark.operators import guards
+
 HEX = "0123456789abcdef"
 
 
@@ -941,7 +943,7 @@ def lsh_neardup_pairs(
         banded.groupBy("tbl", "bucket").count()
         .where(F.col("count") > LSH_BUCKET_TILE_ROWS)
     )
-    if over.limit(1).count() == 0:
+    if guards.bounded_count(over, 0) == 0:
         return (
             banded.groupBy("tbl", "bucket")
             .applyInPandas(bucket_pairs, schema=schema)
@@ -1277,7 +1279,7 @@ def ann_topk(
     if method not in methods:
         raise ValueError(f"method must be one of {methods}, got {method!r}")
     if method == "auto":
-        probe = df.select(id_col).limit(2_000_001).count()
+        probe = guards.bounded_count(df.select(id_col), 2_000_000)
         method = (
             "brute" if probe <= 100_000
             else "ivf_flat" if probe <= 2_000_000

@@ -21,7 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_pack_spark.operators import multimodal, neardup, sampling, similarity, textops
+from etl_pack_spark.operators import guards, multimodal, neardup, sampling, similarity, textops
 from etl_pack_spark.operators import quantize as _quantize
 from etl_pack_spark.operators.classify import nb_train_score_sql
 from etl_pack_spark.operators.cleaning import (
@@ -1473,7 +1473,7 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_pack_spark.operators.components import MAX_DRIVER_PAIRS
 
     bound = MAX_DRIVER_PAIRS // 2
-    small = pairs.limit(bound + 1).count() <= bound
+    small = guards.bounded_count(pairs, bound) <= bound
     method = "driver" if small else "auto"
     # the incremental posture: label batch 1, then FOLD batch 2 into
     # the existing labeling — exact (min-id labels are canonical), so

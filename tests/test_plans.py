@@ -130,3 +130,74 @@ def test_spread_small_scan_is_conditional(spark, sf_dir):
     wide = small.repartition(spark.sparkContext.defaultParallelism * 2)
     kept = spread_small_scan(wide, "l_orderkey")
     assert kept is wide  # untouched: no extra shuffle on a wide input
+
+
+def test_stats_fallback_keeps_results(spark, monkeypatch):
+    """Each plan-stats consumer has a conservative branch for when the
+    stats read fails, and it must return the same rows. The read is
+    made to raise inside ``guards._plan_stats``, so the one stats
+    fallback in the package is what runs."""
+    from types import SimpleNamespace
+
+    from pyspark.sql import functions as F
+
+    import etl_pack_spark.operators.dedup as dd
+    from etl_pack_spark.operators import guards
+    from etl_pack_spark.operators.partitioning import spread_small_scan
+
+    src = spark.range(2000).select(
+        F.col("id").cast("string").alias("a"), (F.col("id") * 7).alias("b")
+    )
+    snap = dd.snapshot_hashes(src.where(F.col("b") < 2100))  # 300 rows
+    model = spark.range(50).select(
+        F.col("id").cast("string").alias("a"), (F.col("id") * 2).alias("v")
+    )
+    # open the engagement window around the 300-row snapshot, so the
+    # fallback's bounded probe has to reproduce the engaged verdict
+    monkeypatch.setattr(dd, "PREFILTER_MIN_ROWS", 10)
+
+    def run():
+        filtered = dd.incremental_filter(src, snap)
+        joined = src.join(guards.maybe_broadcast(model), "a")
+        spread = spread_small_scan(src, "a")
+        plans = (
+            filtered._jdf.queryExecution().executedPlan().toString(),
+            joined._jdf.queryExecution().logical().toString(),
+        )
+        rows = [sorted(map(tuple, f.collect())) for f in (filtered, joined, spread)]
+        return plans, rows
+
+    with_stats = run()
+    assert guards.known_row_count(spark.range(3)) == 3
+    real = guards._plan_stats
+    monkeypatch.setattr(
+        guards, "_plan_stats", lambda df: real(SimpleNamespace(_jdf=None))
+    )
+    assert guards.known_row_count(spark.range(3)) is None
+    without = run()
+
+    assert without[1] == with_stats[1]
+    assert len(with_stats[1][0]) == 1700 and len(with_stats[1][1]) == 50
+    for (filtered_plan, joined_plan) in (with_stats[0], without[0]):
+        assert "Union" in filtered_plan  # pre-filter engaged either way
+        assert "strategy=broadcast" in joined_plan  # hinted either way
+
+
+def test_guards_is_the_only_stats_and_probe_module():
+    """``operators/guards.py`` is the one module that reads plan stats
+    or runs a bounded size probe; every other site calls it."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(suite.__file__).parent
+    pattern = re.compile(
+        r"\.stats\(\)|\.limit\([^)]*\)\.count\(\)|\.limit\([^)]*\)\.take\("
+    )
+    offenders = [
+        f"{path.relative_to(root)}:{text.count(chr(10), 0, m.start()) + 1}"
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "operators" / "guards.py"
+        for text in [path.read_text()]
+        for m in pattern.finditer(text)
+    ]
+    assert offenders == []

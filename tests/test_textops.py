@@ -239,7 +239,7 @@ def test_bigram_ranks_fluent_above_shuffled(spark):
     assert abs(uni[99] - uni[0]) < 1e-12  # unigram can't tell them apart
 
 
-def test_unigram_guard_fallback_matches_broadcast_path(spark):
+def test_unigram_guard_fallback_matches_broadcast_path(spark, monkeypatch):
     """Past MAX_BROADCAST_MODEL_ROWS the model join must drop the
     forced broadcast hint (AQE picks the strategy) and still produce
     identical results. Pinned by running the guard helper at a tiny
@@ -254,10 +254,14 @@ def test_unigram_guard_fallback_matches_broadcast_path(spark):
 
     want = sorted(map(tuple, unigram_logprob(df, "doc_id", "text").collect()))
 
+    import etl_pack_spark.operators.guards as guards
+
     # helper behavior: small model → hinted; past the bound → unhinted
     model = spark.range(10).select(F.col("id").alias("tok"))
-    hinted = maybe_broadcast(model, max_rows=100)
-    unhinted = maybe_broadcast(model, max_rows=5)
+    monkeypatch.setattr(guards, "MAX_BROADCAST_MODEL_ROWS", 100)
+    hinted = maybe_broadcast(model)
+    monkeypatch.setattr(guards, "MAX_BROADCAST_MODEL_ROWS", 5)
+    unhinted = maybe_broadcast(model)
     assert "UnresolvedHint" in hinted._jdf.queryExecution().logical().toString()
     assert "UnresolvedHint" not in unhinted._jdf.queryExecution().logical().toString()
     # r16 zero-job fast path: exact-leaf plans (driver-local relations,
@@ -279,15 +283,8 @@ def test_unigram_guard_fallback_matches_broadcast_path(spark):
     assert known_row_count(local.where("id < 3")) == 2  # folded local
     assert known_row_count(df.groupBy("doc_id").count()) is None
     # and the fallback join still computes the same answer
-    import etl_pack_spark.operators.guards as guards
-
-    orig = guards.MAX_BROADCAST_MODEL_ROWS
-    try:
-        guards.MAX_BROADCAST_MODEL_ROWS = 2  # force fallback
-
-        got = sorted(map(tuple, unigram_logprob(df, "doc_id", "text").collect()))
-    finally:
-        guards.MAX_BROADCAST_MODEL_ROWS = orig
+    monkeypatch.setattr(guards, "MAX_BROADCAST_MODEL_ROWS", 2)  # force fallback
+    got = sorted(map(tuple, unigram_logprob(df, "doc_id", "text").collect()))
     assert got == want
 
 
