@@ -9,6 +9,10 @@ external scheduler (cron/Airflow) replaces ``-schedule``, each firing
 being one invocation — or pass ``--streaming`` for the
 checkpoint-tracked availableNow variant.
 
+``MODES`` is the one statement of which flags each mode takes: every
+firing is checked against it before a Spark session starts, and a flag
+its mode does not take exits 2 instead of being ignored.
+
     python -m etl_pack_spark.cli \
         --source-dir /root/testdata/sf0.001 --table lineitem \
         --target /tmp/tgt --fields l_orderkey,l_shipdate \
@@ -19,6 +23,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 
@@ -55,8 +60,10 @@ def build_parser() -> argparse.ArgumentParser:
                         "one latest row per id (crash-safe swap; no "
                         "matching-behavior change) instead of a transfer")
     p.add_argument("--id-col", default=None,
-                   help="compact-sigstore / store-stats / --funnel "
-                        "(c4 gates): the id column (default: doc_id)")
+                   help="--compact-sigstore / --store-stats / --funnel "
+                        "(c4 gates) / --drift / --datacard / "
+                        "--decontaminate-check: the id column (default: "
+                        "doc_id)")
     p.add_argument("--compact-codes", default=None, metavar="INDEX",
                    help="compact an IVF-PQ index's codes store to one "
                         "latest row per id (crash-safe swap; no query-"
@@ -87,8 +94,9 @@ def build_parser() -> argparse.ArgumentParser:
                         "pretrain_disposition; needs doc_id/text/lang/"
                         "source — stage counts sum to the corpus size)")
     p.add_argument("--text-col", default=None,
-                   help="text column for --funnel with c4 gates "
-                        "(default: text)")
+                   help="--funnel (c4 gates) / --drift / --datacard / "
+                        "--register-eval / --decontaminate-check: the "
+                        "text column (default: text)")
     p.add_argument("--min-words", type=int, default=None,
                    help="--funnel with c4 gates: min words per "
                         "surviving line (default: 5)")
@@ -120,7 +128,8 @@ def build_parser() -> argparse.ArgumentParser:
                         "the --drift baseline and cost one batch scan "
                         "instead of rescanning the baseline corpus")
     p.add_argument("--drift-config", default=None, metavar="JSON",
-                   help="--drift: custom bucket config as a JSON file "
+                   help="--drift with --drift-batch or --drift-save-"
+                        "baseline: custom bucket config as a JSON file "
                         '{"edges": {signal: [cut, ...]}, "categories": '
                         "{signal: [value, ...]}}; REPLACES the built-in "
                         "web-corpus spec (an omitted section disables "
@@ -178,7 +187,9 @@ def build_parser() -> argparse.ArgumentParser:
                         "store with --compact STORE --target STORE "
                         "--in-place when firings accumulate")
     p.add_argument("--report-out", default=None, metavar="STORE",
-                   help="--funnel/--drift: also APPEND this firing's "
+                   help="--funnel / --drift with --drift-batch or "
+                        "--drift-stream / --datacard / --decontaminate-"
+                        "check: also APPEND this firing's "
                         "report rows (fired_at_ms, mode, subject, "
                         "detail, metric, value, verdict) to the parquet "
                         "history store at STORE — the cron-trend "
@@ -201,12 +212,14 @@ def build_parser() -> argparse.ArgumentParser:
                         "labeled-node total (prices one extra full-"
                         "store read; default output is the delta only)")
     p.add_argument("--cluster-by", default="",
-                   help="compact: range-cluster by these columns")
+                   help="--compact / --compact-partitions: range-cluster "
+                        "by these columns")
     p.add_argument("--zorder-by", default="",
                    help="compact: Z-ORDER by these columns "
                         "(multi-dimensional pruning)")
     p.add_argument("--target-file-mb", type=float, default=256.0,
-                   help="compact: target output file size")
+                   help="--compact / --compact-partitions: target "
+                        "output file size")
     p.add_argument("--zorder-bits", type=int, default=0,
                    help="compact: bits per z-order dimension "
                         "(0 = auto: min(16, 63 // n_cols))")
@@ -223,7 +236,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--partition-by", default="", help="target partition columns")
     p.add_argument("--streaming", action="store_true",
                    help="availableNow streaming variant with checkpoint tracking")
-    p.add_argument("--checkpoint", default=None, help="checkpoint dir (streaming)")
+    p.add_argument("--checkpoint", default=None,
+                   help="checkpoint dir (--streaming / --drift-stream)")
     return p
 
 
@@ -236,79 +250,102 @@ from etl_pack_spark.operators.quality import (  # noqa: E402
 )
 
 
+_TRANSFER = "batch transfer"
+
+# Every firing mode and the argparse dests it takes, as (required,
+# optional). This table is the one statement of which flags each mode
+# takes: a mode's flags are exactly the ``args.*`` fields its body in
+# ``main`` reads, and any other flag given with it is an error. Every
+# mode but the batch transfer lists the flag that selects it first.
+MODES: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
+    _TRANSFER: (("source_dir", "table", "target"),
+               ("fields", "window", "order", "increment", "partition_by")),
+    "--streaming": (("streaming", "source_dir", "table", "target",
+                     "checkpoint"), ()),
+    "--compact": (("compact", "target"),
+                  ("cluster_by", "zorder_by", "zorder_bits",
+                   "target_file_mb", "in_place")),
+    "--compact-partitions": (("compact_partitions",),
+                             ("cluster_by", "target_file_mb", "min_files")),
+    "--compact-sigstore": (("compact_sigstore",), ("id_col",)),
+    "--compact-codes": (("compact_codes",), ()),
+    "--update-clusters": (("update_clusters", "matches"),
+                          ("fold_safety_lag_ms", "total")),
+    "--store-stats": (("store_stats",), ("id_col",)),
+    "--funnel": (("funnel",),
+                 ("funnel_gates", "id_col", "text_col", "min_words",
+                  "min_lines", "report_out")),
+    "--funnel-gates curate": (("funnel", "funnel_gates"), ("report_out",)),
+    "--funnel-gates pretrain": (("funnel", "funnel_gates"), ("report_out",)),
+    "--drift --drift-batch": (("drift", "drift_batch"),
+                              ("drift_config", "id_col", "text_col",
+                               "report_out")),
+    "--drift --drift-save-baseline": (("drift", "drift_save_baseline"),
+                                      ("drift_config", "id_col",
+                                       "text_col")),
+    "--drift --drift-stream": (("drift", "drift_stream", "checkpoint",
+                                "report_out"), ("id_col", "text_col")),
+    "--report-trend": (("report_trend",), ()),
+    "--register-eval": (("register_eval", "eval_store", "eval_set"),
+                        ("text_col", "eval_ngram")),
+    "--datacard": (("datacard",),
+                   ("datacard_groups", "langid_model", "id_col", "text_col",
+                    "report_out")),
+    "--decontaminate-check": (("decontaminate_check", "eval_store"),
+                              ("id_col", "text_col", "report_out")),
+}
+_MODE_FLAGS = tuple(dict.fromkeys(
+    required[0] for mode, (required, _) in MODES.items() if mode != _TRANSFER
+))
+_DRIFT_SUBS = ("drift_batch", "drift_save_baseline", "drift_stream")
+
+
+def _flags(dests) -> str:
+    return ", ".join("--" + d.replace("_", "-") for d in dests)
+
+
+def _mode_error(parser: argparse.ArgumentParser,
+                args: argparse.Namespace) -> str | None:
+    """The one flag-membership check: pick the mode from the given flags
+    and reject flags it does not take, then missing required ones. A
+    flag counts as given when its value differs from its default."""
+    given = [d for d, v in vars(args).items() if v != parser.get_default(d)]
+    flags = [d for d in _MODE_FLAGS if d in given]
+    if len(flags) > 1:
+        return f"{_flags(flags)} are exclusive"
+    mode = _flags(flags) or _TRANSFER
+    if mode == "--funnel" and args.funnel_gates in ("curate", "pretrain"):
+        mode = f"--funnel-gates {args.funnel_gates}"
+    elif mode == "--drift":
+        subs = [d for d in _DRIFT_SUBS if d in given]
+        if len(subs) != 1:
+            return ("--drift takes exactly one of --drift-batch (a PSI "
+                    "firing), --drift-save-baseline (persist the baseline "
+                    "histogram) or --drift-stream (resident monitor)")
+        mode = f"--drift {_flags(subs)}"
+    required, optional = MODES[mode]
+    foreign = [d for d in given if d not in required + optional]
+    if foreign:
+        owners = [m for m, (req, opt) in MODES.items()
+                  if any(d in req + opt for d in foreign)]
+        return (f"{_flags(foreign)} do not apply to {mode} "
+                f"(they only apply to {', '.join(owners)})")
+    missing = [d for d in required if d not in given]
+    if missing:
+        return f"{mode} requires {_flags(missing)}"
+    return None
+
 
 def main(argv: list[str] | None = None) -> int:
-    args = build_parser().parse_args(argv)
+    parser = build_parser()
+    args = parser.parse_args(argv)
 
     # validate BEFORE building a Spark session: a cron misconfiguration
     # should fail in milliseconds with a clear message, not after tens
     # of seconds of JVM startup
-    zorder_cols = [c for c in args.zorder_by.split(",") if c]
-    if sum(map(bool, (args.compact, args.compact_partitions,
-                      args.compact_sigstore, args.compact_codes,
-                      args.update_clusters, args.store_stats,
-                      args.funnel, args.drift, args.report_trend,
-                      args.register_eval, args.datacard,
-                      args.decontaminate_check))) > 1:
-        print("error: --compact, --compact-partitions, "
-              "--compact-sigstore, --compact-codes, "
-              "--update-clusters, --store-stats, --funnel, "
-              "--drift, --report-trend, --register-eval, "
-              "--datacard and --decontaminate-check are exclusive",
-              file=sys.stderr)
-        return 2
-    if args.langid_model is not None and not args.datacard:
-        print("error: --langid-model only applies to --datacard",
-              file=sys.stderr)
-        return 2
-    if args.datacard_groups is not None and not args.datacard:
-        print("error: --datacard-groups only applies to --datacard",
-              file=sys.stderr)
-        return 2
-    if args.register_eval:
-        if not args.eval_store or not args.eval_set:
-            print("error: --register-eval requires --eval-store and "
-                  "--eval-set", file=sys.stderr)
-            return 2
-    elif args.decontaminate_check:
-        if not args.eval_store:
-            print("error: --decontaminate-check requires --eval-store",
-                  file=sys.stderr)
-            return 2
-        if args.eval_set or args.eval_ngram is not None:
-            print("error: --eval-set/--eval-ngram only apply to "
-                  "--register-eval (the check takes every registered "
-                  "set at its own stored width)", file=sys.stderr)
-            return 2
-    elif args.eval_store or args.eval_set or args.eval_ngram is not None:
-        print("error: --eval-store/--eval-set/--eval-ngram only apply "
-              "to --register-eval/--decontaminate-check", file=sys.stderr)
-        return 2
-    if args.drift:
-        n_modes = sum(map(bool, (args.drift_batch,
-                                 args.drift_save_baseline,
-                                 args.drift_stream)))
-        if n_modes != 1:
-            print("error: --drift takes exactly one of --drift-batch "
-                  "(a PSI firing), --drift-save-baseline (persist the "
-                  "baseline histogram) or --drift-stream (resident "
-                  "monitor)", file=sys.stderr)
-            return 2
-        if args.drift_stream:
-            if not args.checkpoint or not args.report_out:
-                print("error: --drift-stream requires --checkpoint and "
-                      "--report-out (the verdicts land in the history "
-                      "store)", file=sys.stderr)
-                return 2
-            if args.drift_config:
-                print("error: --drift-stream reads the bucket config "
-                      "stored with the saved baseline; --drift-config "
-                      "does not apply", file=sys.stderr)
-                return 2
-    elif (args.drift_batch or args.drift_save_baseline or args.drift_config
-          or args.drift_stream):
-        print("error: --drift-batch/--drift-save-baseline/--drift-config/"
-              "--drift-stream only apply to --drift", file=sys.stderr)
+    err = _mode_error(parser, args)
+    if err:
+        print(f"error: {err}", file=sys.stderr)
         return 2
     drift_edges = drift_categories = None
     if args.drift_config:
@@ -324,185 +361,37 @@ def main(argv: list[str] | None = None) -> int:
             print(f"error: --drift-config {args.drift_config}: {e}",
                   file=sys.stderr)
             return 2
-    if args.report_out and not (args.funnel or args.drift_batch
-                                or args.drift_stream or args.datacard
-                                or args.decontaminate_check):
-        print("error: --report-out only applies to --funnel/--drift/"
-              "--datacard/--decontaminate-check firings", file=sys.stderr)
-        return 2
-    if args.drift:
-        # r11 self-review: --drift uses --id-col/--text-col but none of
-        # the funnel gate flags — silently accepting them would print a
-        # report the user thinks those flags shaped (the same class the
-        # --funnel-gates curate check closed)
-        foreign = [
-            name for name, val in [
-                ("--min-words", args.min_words),
-                ("--min-lines", args.min_lines),
-                ("--funnel-gates", args.funnel_gates),
-            ] if val is not None
-        ]
-        if foreign:
-            print(f"error: {', '.join(foreign)} do not apply to --drift "
-                  "(it takes only --drift-batch/--drift-save-baseline/"
-                  "--drift-stream, --drift-config, --id-col, --text-col, "
-                  "--checkpoint and --report-out)",
-                  file=sys.stderr)
-            return 2
-    if args.funnel_gates is not None and not args.funnel:
-        print("error: --funnel-gates only applies to --funnel",
+    if args.target_file_mb <= 0 or args.min_files < 2:
+        print("error: --target-file-mb must be > 0 and --min-files >= 2",
               file=sys.stderr)
         return 2
-    if args.funnel and (args.funnel_gates or "c4") in ("curate", "pretrain"):
-        # r10 ADVICE: curate_disposition (and pretrain_disposition)
-        # hardcode doc_id/text/lang and their own thresholds —
-        # silently accepting gate-tuning flags would print a report
-        # computed with DIFFERENT gates than the user asked for.
-        # Mirror the other mutual-exclusion checks.
-        foreign = [
-            name for name, val in [
-                ("--min-words", args.min_words),
-                ("--min-lines", args.min_lines),
-                ("--text-col", args.text_col),
-                ("--id-col", args.id_col),
-            ] if val is not None
-        ]
-        if foreign:
-            print(f"error: {', '.join(foreign)} do not apply to "
-                  f"--funnel-gates {args.funnel_gates} (its gates are "
-                  "fixed: doc_id/text/lang columns and the pipeline's "
-                  "own thresholds)", file=sys.stderr)
-            return 2
-    if args.update_clusters and not args.matches:
-        print("error: --update-clusters requires --matches",
+    if args.cluster_by and args.zorder_by:
+        print("error: --cluster-by and --zorder-by are exclusive",
               file=sys.stderr)
         return 2
-    if args.matches and not args.update_clusters:
-        print("error: --matches only applies to --update-clusters",
-              file=sys.stderr)
-        return 2
-    if (args.fold_safety_lag_ms or args.total) and not args.update_clusters:
-        print("error: --fold-safety-lag-ms/--total only apply to "
-              "--update-clusters", file=sys.stderr)
-        return 2
-    if args.compact_codes:
-        foreign = [
-            name for name, val in [
-                ("--target", args.target), ("--zorder-by", args.zorder_by),
-                ("--cluster-by", args.cluster_by),
-                ("--in-place", args.in_place),
-                ("--source-dir", args.source_dir), ("--table", args.table),
-                ("--fields", args.fields), ("--window", args.window),
-                ("--order", args.order), ("--increment", args.increment),
-                ("--partition-by", args.partition_by),
-                ("--streaming", args.streaming),
-                ("--checkpoint", args.checkpoint),
-            ] if val
-        ]
-        if foreign:
-            print(f"error: {', '.join(foreign)} do not apply to "
-                  "--compact-codes (it takes only the index path)",
-                  file=sys.stderr)
+    # z-order bit budget: bits*len(cols) must fit in 63 bits. Auto
+    # (--zorder-bits 0) clamps to the widest legal value so 4+ columns
+    # just work; an EXPLICIT over-budget value is a config error and
+    # must fail here, not after JVM startup.
+    zorder_cols = [c for c in args.zorder_by.split(",") if c]
+    zorder_bits = args.zorder_bits
+    if zorder_cols:
+        if zorder_bits == 0:
+            zorder_bits = min(16, 63 // len(zorder_cols))
+        elif zorder_bits < 1 or zorder_bits * len(zorder_cols) > 63:
+            print(
+                f"error: --zorder-bits {zorder_bits} with "
+                f"{len(zorder_cols)} columns needs bits*cols in "
+                f"[1, 63]; max here is {63 // len(zorder_cols)} "
+                "(or 0 for auto)",
+                file=sys.stderr)
             return 2
-    if args.compact_sigstore:
-        foreign = [
-            name for name, val in [
-                ("--target", args.target), ("--zorder-by", args.zorder_by),
-                ("--cluster-by", args.cluster_by),
-                ("--in-place", args.in_place),
-                ("--source-dir", args.source_dir), ("--table", args.table),
-                ("--fields", args.fields), ("--window", args.window),
-                ("--order", args.order), ("--increment", args.increment),
-                ("--partition-by", args.partition_by),
-                ("--streaming", args.streaming),
-                ("--checkpoint", args.checkpoint),
-            ] if val
-        ]
-        if foreign:
-            print(f"error: {', '.join(foreign)} do not apply to "
-                  "--compact-sigstore (it takes only --id-col)",
-                  file=sys.stderr)
-            return 2
-    if args.compact_partitions:
-        if args.target_file_mb <= 0 or args.min_files < 2:
-            print("error: --target-file-mb must be > 0 and --min-files >= 2",
-                  file=sys.stderr)
-            return 2
-        foreign = [
-            name for name, val in [
-                ("--target", args.target), ("--zorder-by", args.zorder_by),
-                ("--zorder-bits", args.zorder_bits),
-                ("--in-place", args.in_place),
-                ("--source-dir", args.source_dir), ("--table", args.table),
-                ("--fields", args.fields), ("--window", args.window),
-                ("--order", args.order), ("--increment", args.increment),
-                ("--partition-by", args.partition_by),
-                ("--streaming", args.streaming),
-                ("--checkpoint", args.checkpoint),
-            ] if val
-        ]
-        if foreign:
-            print(f"error: {', '.join(foreign)} do not apply to "
-                  "--compact-partitions (it takes only --cluster-by, "
-                  "--target-file-mb, --min-files)", file=sys.stderr)
-            return 2
-    elif args.compact:
-        if not args.target:
-            print("error: --compact requires --target", file=sys.stderr)
-            return 2
-        if args.cluster_by and args.zorder_by:
-            print("error: --cluster-by and --zorder-by are exclusive",
-                  file=sys.stderr)
-            return 2
-        if args.target_file_mb <= 0:
-            print("error: --target-file-mb must be > 0", file=sys.stderr)
-            return 2
-        # z-order bit budget: bits*len(cols) must fit in 63 bits. Auto
-        # (--zorder-bits 0) clamps to the widest legal value so 4+
-        # columns just work; an EXPLICIT over-budget value is a config
-        # error and must fail here, not after JVM startup.
-        zorder_bits = args.zorder_bits
-        if zorder_cols:
-            if zorder_bits == 0:
-                zorder_bits = min(16, 63 // len(zorder_cols))
-            elif zorder_bits < 1 or zorder_bits * len(zorder_cols) > 63:
-                print(
-                    f"error: --zorder-bits {zorder_bits} with "
-                    f"{len(zorder_cols)} columns needs bits*cols in "
-                    f"[1, 63]; max here is {63 // len(zorder_cols)} "
-                    "(or 0 for auto)",
-                    file=sys.stderr)
-                return 2
-        import os as _os
-        same = _os.path.normpath(_os.path.abspath(args.compact)) == \
-            _os.path.normpath(_os.path.abspath(args.target))
-        if same and not args.in_place:
-            print("error: --compact SRC equals --target; pass --in-place "
-                  "for an atomic self-rewrite", file=sys.stderr)
-            return 2
-        ignored = [
-            name for name, val in [
-                ("--source-dir", args.source_dir), ("--table", args.table),
-                ("--fields", args.fields), ("--window", args.window),
-                ("--order", args.order), ("--increment", args.increment),
-                ("--partition-by", args.partition_by),
-                ("--streaming", args.streaming),
-            ] if val
-        ]
-        if ignored:
-            print(f"error: {', '.join(ignored)} do not apply to --compact",
-                  file=sys.stderr)
-            return 2
-    elif (
-        not args.compact_sigstore and not args.compact_codes
-        and not args.update_clusters and not args.store_stats
-        and not args.funnel and not args.drift and not args.report_trend
-        and not args.register_eval and not args.datacard
-        and not args.decontaminate_check
-        and (not args.source_dir or not args.table or not args.target)
+    if args.compact and not args.in_place and (
+        os.path.normpath(os.path.abspath(args.compact))
+        == os.path.normpath(os.path.abspath(args.target))
     ):
-        print("error: --source-dir, --table and --target are required "
-              "for transfers", file=sys.stderr)
+        print("error: --compact SRC equals --target; pass --in-place "
+              "for an atomic self-rewrite", file=sys.stderr)
         return 2
 
     from etl_pack_spark.session import get_spark
@@ -1059,9 +948,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.streaming:
-        if not args.checkpoint:
-            print("error: --streaming requires --checkpoint", file=sys.stderr)
-            return 2
         from etl_pack_spark.streaming.incremental import stream_incremental_transfer
 
         src = f"{args.source_dir}/{args.table}.parquet"

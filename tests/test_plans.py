@@ -182,6 +182,19 @@ def test_stats_fallback_keeps_results(spark, monkeypatch):
         assert "Union" in filtered_plan  # pre-filter engaged either way
         assert "strategy=broadcast" in joined_plan  # hinted either way
 
+    # spread_small_scan's other fallback: the partition count cannot be
+    # planned (``df.rdd`` raises), so it repartitions by the key
+    planned = []
+
+    def no_rdd(df):
+        planned.append(df)
+        raise RuntimeError("partition count unavailable")
+
+    monkeypatch.setattr(type(src), "rdd", property(no_rdd))
+    spread = spread_small_scan(src, "a")
+    assert planned
+    assert sorted(map(tuple, spread.collect())) == with_stats[1][2]
+
 
 def test_guards_is_the_only_stats_and_probe_module():
     """``operators/guards.py`` is the one module that reads plan stats
