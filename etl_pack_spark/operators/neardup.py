@@ -661,15 +661,6 @@ def ngram_jaccard_pairs_sql(
 # SimHash (64-bit, md5-derived token bits, term-frequency weighted)
 # ---------------------------------------------------------------------------
 
-def _bit_sql(pos: int, bit: int, dialect: str) -> str:
-    """Bit (pos, bit) of a token's md5 hex ``h``: nibble value of hex
-    char ``pos`` (1-based), tested at ``bit``. Same arithmetic, two
-    dialects."""
-    if dialect == "spark":
-        return f"(shiftright(instr('{HEX}', substr(h, {pos}, 1)) - 1, {bit}) & 1)"
-    return f"(((strpos('{HEX}', substr(h, {pos}, 1)) - 1) >> {bit}) & 1)"
-
-
 def simhash_signature(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """64-bit SimHash per document as a 16-hex-char string.
 

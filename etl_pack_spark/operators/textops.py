@@ -104,25 +104,6 @@ def quality_metrics(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def quality_metrics_sql(table: str, id_col: str, text_col: str) -> str:
-    stop = _marker_count_sql("toks", "en")
-    return f"""
-    WITH t AS (SELECT {id_col}, {text_col} AS txt, {tokens_sql(text_col)} AS toks FROM {table})
-    SELECT {id_col},
-           length(txt) AS n_chars,
-           len(toks) AS n_tokens,
-           length(txt) - length(regexp_replace(txt, '{PUNCT_RE}', '', 'g')) AS n_punct,
-           {stop} AS n_stopwords,
-           CASE WHEN len(toks) > 0 THEN
-               CAST(list_reduce(list_prepend(0, list_transform(toks, x -> length(x))),
-                                (a, v) -> a + v) AS DOUBLE)
-                   / CAST(len(toks) AS DOUBLE) END AS avg_token_len,
-           CASE WHEN len(toks) > 0 THEN
-               CAST({stop} AS DOUBLE) / CAST(len(toks) AS DOUBLE) END AS stopword_ratio
-    FROM t
-    """
-
-
 def quality_signals(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
     """Combined per-doc quality gate: length/punct/stopword metrics plus
     the k-gram repetition signal, in ONE projection pass (single scan,
@@ -253,22 +234,6 @@ def repetition_ratio(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> D
             ratio.alias("repetition"),
         )
     )
-
-
-def repetition_ratio_sql(table: str, id_col: str, text_col: str, k: int = 3) -> str:
-    return f"""
-    WITH sh AS (
-        SELECT {id_col}, {shingles_sql('toks', k)} AS s
-        FROM (SELECT {id_col}, {tokens_sql(text_col)} AS toks FROM {table})
-    )
-    SELECT {id_col},
-           len(s) AS n_grams,
-           len(list_distinct(s)) AS n_distinct,
-           CASE WHEN len(s) > 0 THEN
-               1.0 - CAST(len(list_distinct(s)) AS DOUBLE) / CAST(len(s) AS DOUBLE)
-           END AS repetition
-    FROM sh
-    """
 
 
 def fingerprint(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:

@@ -25,7 +25,6 @@ from etl_pack_spark.operators import guards, multimodal, neardup, sampling, simi
 from etl_pack_spark.operators import quantize as _quantize
 from etl_pack_spark.operators.classify import nb_train_score_sql
 from etl_pack_spark.operators.cleaning import (
-    c4_clean_sql,
     c4_disposition_sql,
     dedup_lines_sql,
     gopher_signals_sql,
@@ -41,10 +40,7 @@ from etl_pack_spark.operators.substrings import (
     repeated_ngram_spans_sql as _repeated_ngram_spans_sql,
 )
 from etl_pack_spark.sinks.sharding import shard_assign_sql as _shard_assign_sql
-from etl_pack_spark.operators.contamination import (
-    contamination_report_sql,
-    eval_contamination_sql,
-)
+from etl_pack_spark.operators.contamination import eval_contamination_sql
 from etl_pack_spark.operators.quality import (
     corpus_datacard_sql,
     mad_outliers_sql,
@@ -59,13 +55,12 @@ from etl_pack_spark.operators.retrieval import (
 from etl_pack_spark.operators.retrieval import bm25_topk_sql
 from etl_pack_spark.operators.retrieval import rrf_fuse_sql as retrieval_rrf_fuse_sql
 from etl_pack_spark.plans.merge import scd2_build_sql, snapshot_diff_sql
-from etl_pack_spark.operators.tokenize import tokens_sql
 from etl_pack_spark.operators.dedup import (
     exact_dedup,
     incremental_filter,
     snapshot_hashes,
 )
-from etl_pack_spark.operators.hashing import row_hash, row_hash_sql, with_row_hash
+from etl_pack_spark.operators.hashing import row_hash_sql, with_row_hash
 from etl_pack_spark.operators.partitioning import spread_small_scan
 from etl_pack_spark.plans.curate import curate_corpus_sql, curate_disposition_sql
 from etl_pack_spark.sinks.writers import append_table
@@ -89,12 +84,6 @@ def _dec(c: str):
 # P: projection / window / order / limit (reference read-path semantics)
 # ---------------------------------------------------------------------------
 
-def q_p1_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1 — column projection (mysql/reader/main.go:29,167)."""
-    spec = ReadSpec(table="lineitem", fields=["l_orderkey", "l_linenumber", "l_extendedprice"])
-    return windowed_read(spark, sf_dir, spec)
-
-
 def q_p2_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2 — inclusive BETWEEN range window on the cursor column
     (mysql/reader/main.go:146-148)."""
@@ -102,18 +91,6 @@ def q_p2_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         table="lineitem",
         fields=["l_orderkey", "l_linenumber", "l_quantity", "l_shipdate"],
         window=("l_shipdate", WIN_LO, WIN_HI),
-    )
-    return windowed_read(spark, sf_dir, spec)
-
-
-def q_p3_order_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P3+P4 — ORDER BY … DESC with LIMIT (mysql/reader/main_test.go:52-61);
-    unique tie-break keeps the result set deterministic."""
-    spec = ReadSpec(
-        table="orders",
-        fields=["o_orderkey", "o_totalprice"],
-        order=["o_totalprice DESC", "o_orderkey"],
-        limit=100,
     )
     return windowed_read(spark, sf_dir, spec)
 
@@ -175,10 +152,10 @@ def q_t1_datetime_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round-4 merge: the same events projection also pins T2 (type-tag
     normalization incl. unsigned widening — uint64→DECIMAL(20,0),
-    uint16→INT, SURVEY §7.4; q_t2_widen keeps the lineitem-side pin in
-    pytest) and the JSON extraction path (events.props — q_json_extract
-    stays pytest-pinned): all are per-row casts over one scan, so one
-    driver slot covers the whole projection family."""
+    uint16→INT, SURVEY §7.4) and the JSON extraction path
+    (events.props): all are per-row casts over one scan, so one registry
+    slot covers the whole projection family and is the oracle pin of
+    those casts and of ``get_json_object``."""
     df = read_table(spark, sf_dir, "events")
     wire = F.date_format(F.col("ts"), "yyyy-MM-dd HH:mm:ss")
     quoted = F.concat(F.lit("'"),
@@ -200,20 +177,6 @@ def q_t1_datetime_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast("double").alias("value_f64"),
         # JSON extraction (events.props)
         F.get_json_object("props", "$.k").cast("int").alias("props_k"),
-    )
-
-
-def q_t2_widen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T2 — schema normalization incl. unsigned widening: treat
-    l_orderkey as uint64 → DECIMAL(20,0), l_linenumber as uint16 → INT
-    (SURVEY §7.4)."""
-    df = read_table(spark, sf_dir, "lineitem")
-    # decimal output rendered as string: pandas-side decimal handling
-    # differs between engines, the digits do not
-    return df.select(
-        F.col("l_orderkey").cast("decimal(20,0)").cast("string").alias("k_u64"),
-        F.col("l_linenumber").cast("int").alias("n_u16"),
-        F.col("l_quantity").cast("double").alias("qty_f64"),
     )
 
 
@@ -281,8 +244,8 @@ def q_agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round-4 merge: the same aggregation also pins exact interpolated
     quantiles (Spark `percentile` == DuckDB `quantile_cont`, shared
     linear-interpolation definition, bit-identical doubles) — one agg
-    pass covers both families; q_agg_quantiles keeps the standalone
-    framing pinned in pytest."""
+    pass covers both families and is the oracle pin of the
+    ``percentile`` aggregate."""
     df = read_table(spark, sf_dir, "lineitem")
     one = F.lit(1).cast(_DEC)
     q = F.expr("percentile(CAST(l_extendedprice AS DOUBLE), array(0.25, 0.5, 0.99))")
@@ -392,25 +355,6 @@ def q_tpch_q5_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level vocabulary statistics: top-50 tokens by frequency
-    (tie-break alphabetical) with document frequency — the global
-    aggregation a tokenizer-training / zipf-analysis pass needs."""
-    from etl_pack_spark.operators.tokenize import tokens
-
-    docs = read_table(spark, sf_dir, "documents")
-    tok = docs.select(F.col("doc_id"), F.explode(tokens("text")).alias("tok"))
-    return (
-        tok.groupBy("tok")
-        .agg(
-            F.count(F.lit(1)).alias("tf"),
-            F.countDistinct("doc_id").alias("df"),
-        )
-        .orderBy(F.col("tf").desc(), F.col("tok"))
-        .limit(50)
-    )
-
-
 def q_cluster_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMeans clustering over the embedding column (pyspark.ml, fixed
     seed). Iterative algorithm → rows-only check; the test asserts
@@ -456,53 +400,6 @@ def q_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-KMV_K = 64
-
-
-def q_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-minimum-values distinct-count sketch, md5-derived and therefore
-    bit-reproducible cross-engine (unlike HLL): per event_type keep the
-    64 smallest value hashes; estimate = (k-1) / kth-smallest-fraction.
-    Exact count alongside for error inspection. The production-scale
-    path is approx_count_distinct (HLL++, engine-specific, not oracle-
-    able); this query pins the sketch *machinery*."""
-    events = read_table(spark, sf_dir, "events")
-    hashed = events.select(
-        "event_type", F.md5(F.col("user_id").cast("string")).alias("h")
-    )
-    # Two-level bounded aggregation: a single collect_set per group would
-    # buffer EVERY distinct hash (billions at 100 TB → executor OOM).
-    # Level 1 groups by (event_type, input partition), so each agg buffer
-    # holds at most one partition's distincts — bounded by
-    # spark.sql.files.maxPartitionBytes, independent of group cardinality.
-    # Level 2 merges the per-partition bottom-64s: ≤ 64 × n_partitions
-    # values per group. The bottom-64 of a union is the bottom-64 of the
-    # per-part bottom-64s, so the result is partitioning-invariant.
-    mins1 = hashed.groupBy(
-        "event_type", F.spark_partition_id().alias("__pid")
-    ).agg(F.slice(F.sort_array(F.collect_set("h")), 1, KMV_K).alias("mins_p"))
-    merged = (
-        mins1.select("event_type", F.explode("mins_p").alias("h"))
-        .groupBy("event_type")
-        .agg(F.slice(F.sort_array(F.collect_set("h")), 1, KMV_K).alias("mins"))
-    )
-    # exact distinct planned by Spark as expand + re-group — per-buffer
-    # state is tiny; kept for error inspection, joined on the few groups
-    exact = hashed.groupBy("event_type").agg(
-        F.countDistinct("h").alias("exact_distinct")
-    )
-    # bounded by construction: exact has one row per event_type group
-    grouped = merged.join(F.broadcast(exact), "event_type")
-    kth = F.element_at("mins", KMV_K)
-    frac = (
-        F.conv(F.substring(kth, 1, 8), 16, 10).cast("double") / F.lit(4294967296.0)
-    )
-    est = F.when(
-        F.size("mins") < KMV_K, F.col("exact_distinct").cast("double")
-    ).otherwise(F.lit(KMV_K - 1).cast("double") / frac)
-    return grouped.select("event_type", "exact_distinct", est.alias("kmv_estimate"))
-
-
 def q_asof_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (custom operator — union+window, no join node): each
     purchase event enriched with the user's latest prior-or-equal view
@@ -545,49 +442,6 @@ def q_range_click_in_signup_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("click_id", "signup_id", "click_ts")
 
 
-def q_agg_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated quantiles per return flag. Spark `percentile`
-    and DuckDB `quantile_cont` share the linear-interpolation
-    definition, so doubles match bit-for-bit. (The sketch-based
-    scale path for quantiles is approx_percentile; this is the exact
-    baseline, a sort-based aggregate.)"""
-    li = read_table(spark, sf_dir, "lineitem")
-    q = F.expr("percentile(CAST(l_extendedprice AS DOUBLE), array(0.25, 0.5, 0.75, 0.99))")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(q.alias("q"))
-        .select(
-            "l_returnflag",
-            F.element_at("q", 1).alias("q25"),
-            F.element_at("q", 2).alias("q50"),
-            F.element_at("q", 3).alias("q75"),
-            F.element_at("q", 4).alias("q99"),
-        )
-    )
-
-
-def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP over (priority, status): subtotals + grand total — the
-    grouping-sets family Catalyst provides natively."""
-    orders = read_table(spark, sf_dir, "orders")
-    return (
-        orders.rollup("o_orderpriority", "o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(_dec("o_totalprice")).cast("double").alias("total_price"),
-        )
-    )
-
-
-def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured extraction from events.props JSON text."""
-    events = read_table(spark, sf_dir, "events")
-    return events.select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("int").alias("k"),
-    )
-
-
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (30-min inactivity gap) per user via Spark's
     native session_window — the stateful-stream primitive, here in
@@ -606,22 +460,6 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "sum_value",
         )
-    )
-
-
-EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def q_pivot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot: events per day × type (explicit value list → stable
-    column set)."""
-    events = read_table(spark, sf_dir, "events")
-    return (
-        events.withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
-        .groupBy("day")
-        .pivot("event_type", EVENT_TYPES)
-        .agg(F.count(F.lit(1)))
-        .na.fill(0, EVENT_TYPES)
     )
 
 
@@ -819,9 +657,9 @@ def q_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup clusters land whole in one split, so near-duplicate
     train/eval contamination is structurally impossible (Lee et al.
     2021 §5); singleton docs hash-split as before, appends never move
-    an existing group. Round-4 upgrade of the plain per-doc split
-    (which stays pinned: retired `split_documents_plain` + the split
-    stage inside `corpus_curate`)."""
+    an existing group. Round-4 upgrade of the plain per-doc split,
+    whose ``split_assign`` stays gated as the split stage of
+    ``curate_disposition`` in the ``corpus_curate`` slot."""
     from etl_pack_spark.operators.cache import truncated_persist
 
     docs = read_table(spark, sf_dir, "documents")
@@ -839,12 +677,6 @@ def q_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang", "cluster_id", "split")
 
 
-def q_split_documents_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r4 per-doc hash split (retired pin)."""
-    docs = read_table(spark, sf_dir, "documents")
-    return sampling.split_assign(docs, "doc_id").select("doc_id", "lang", "split")
-
-
 def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1 — the streaming transformation run in batch mode: tumbling
     1-hour event windows. The exact same function executes under
@@ -858,28 +690,6 @@ def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Text analysis + multimodal plumbing (SURVEY §7.3 / north-star extensions)
 # ---------------------------------------------------------------------------
-
-def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
-    return textops.language_id(docs, "doc_id", "text")
-
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality gate signals (length/punct/stopword + 3-gram repetition)
-    in one projection pass — single scan, no shuffle."""
-    docs = read_table(spark, sf_dir, "documents")
-    return textops.quality_signals(docs, "doc_id", "text")
-
-
-def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
-    return textops.token_counts(docs, "doc_id", "text")
-
-
-def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
-    return textops.fingerprint(docs, "doc_id", "text")
-
 
 def q_text_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing pass over documents (emails/phones/card-like).
@@ -921,8 +731,9 @@ def q_dq_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned). All one-row profiles broadcast onto the 5-row summary —
     no extra shuffle; the drift side computes the signals ONCE (both
     histograms read one persisted slim frame — baseline = the corpus,
-    batch = its filtered slice). The pre-drift framing is pinned as
-    retired ``dq_profile_orders_plain``."""
+    batch = its filtered slice). The profile, outlier and PII columns
+    of the pre-drift framing are hashed here through the same
+    operator calls."""
     from etl_pack_spark.operators.cache import pooled_persist
     from etl_pack_spark.operators.quality import (
         corpus_datacard,
@@ -993,28 +804,6 @@ def q_dq_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(drift))
         .crossJoin(F.broadcast(card))
     )
-
-
-def q_dq_profile_orders_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r6-r10 framing (retired pin): profile × outliers × PII,
-    without the drift summary."""
-    from etl_pack_spark.operators.quality import mad_outliers, pii_profile, profile
-
-    orders = read_table(spark, sf_dir, "orders")
-    prof = profile(orders, DQ_COLS, DQ_NUM)
-    priced = orders.select(
-        "o_orderpriority", F.col("o_totalprice").cast("double").alias("price")
-    )
-    out = mad_outliers(priced, "price", ["o_orderpriority"], accuracy=None)
-    summ = out.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_vals"),
-        F.sum(F.col("is_outlier").cast("int")).cast("long").alias("n_outliers"),
-        F.round(F.max("robust_z"), 6).alias("max_robust_z"),
-    )
-    pii = pii_profile(
-        read_table(spark, sf_dir, "documents"), PII_PROFILE_COLS
-    ).withColumnRenamed("n_rows", "pii_n_docs")
-    return summ.crossJoin(F.broadcast(prof)).crossJoin(F.broadcast(pii))
 
 
 def q_mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1312,24 +1101,6 @@ def q_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hist.join(diff, ["user_id", "event_type"], "left")
 
 
-def q_c4_clean_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r10 framing (retired pin): survivors only."""
-    from etl_pack_spark.operators.cleaning import c4_clean, html_clean_lines
-
-    docs = read_table(spark, sf_dir, "documents")
-    base = c4_clean(
-        docs, "doc_id", "text",
-        min_words=30, min_lines=1, badwords=["slow"], require_terminal=False,
-    )
-    return base.select(
-        "id", "text_clean", "n_lines", "n_kept",
-        F.array_join(html_clean_lines(F.col("text_clean")), "\n").alias(
-            "text_stripped"
-        ),
-        textops.normalize_text_col(F.col("text_clean")).alias("text_norm"),
-    )
-
-
 def q_c4_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-recipe corpus cleaning: line-level filters + document-level
     gates as one map-only projection (operators/cleaning.py). The
@@ -1350,8 +1121,9 @@ def q_c4_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``drop_stage`` naming the first gate that dropped it, NULL for
     keeps), putting the curation-audit semantics under the driver's
     value hash; survivors carry the canonicalization columns exactly
-    as before, dropped docs carry NULLs. The survivor-only framing
-    stays pinned as retired ``c4_clean_plain``. A user aggregates the
+    as before, dropped docs carry NULLs. The survivor-only
+    ``c4_clean`` is the ``drop_stage IS NULL`` slice of the same
+    ``c4_disposition``, so this slot gates it too. A user aggregates the
     funnel report with ``cleaning.curation_funnel`` (pytest-pinned)."""
     from etl_pack_spark.operators.cleaning import (
         c4_disposition,
@@ -1383,8 +1155,9 @@ def q_contamination_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/eval contamination, EVAL-ITEM grain (r9: the slot flipped
     direction — per-eval-item contaminated-fraction report, one row
     per held-out doc incl. clean ones at frac 0; the train-doc-grain
-    report stays pinned as retired ``contamination_eval_trainside``
-    and live inside ``decontaminate``/the pretrain plan): distinct
+    ``contamination_report`` is DuckDB-pinned in
+    tests/test_contamination.py and live inside ``decontaminate``/the
+    pretrain plan): distinct
     8-gram overlap of each eval doc (doc_id % 10 == 7) against the
     rest of the corpus, broadcast-bounded both directions."""
     from etl_pack_spark.operators.contamination import eval_contamination
@@ -1393,16 +1166,6 @@ def q_contamination_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = docs.where(F.col("doc_id") % 10 != 7)
     evald = docs.where(F.col("doc_id") % 10 == 7)
     return eval_contamination(train, evald, "doc_id", "text", n=8)
-
-
-def q_contamination_eval_trainside(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r9 framing (retired pin): per-TRAIN-doc hit counts."""
-    from etl_pack_spark.operators.contamination import contamination_report
-
-    docs = read_table(spark, sf_dir, "documents")
-    train = docs.where(F.col("doc_id") % 10 != 7)
-    evald = docs.where(F.col("doc_id") % 10 == 7)
-    return contamination_report(train, evald, "doc_id", "text", n=8)
 
 
 def q_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1426,9 +1189,7 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     r8 rider (same grain, +1 column): ``survived`` — the quality-aware
     survivor pick (``cluster_dedup(survivor_by="n_chars")``: keep the
     LONGEST copy per cluster, min-id tie-break), putting the r7
-    curation-posture operator under the driver's value hash. The
-    cluster-only framing stays pinned as retired
-    ``neardup_components_plain``.
+    curation-posture operator under the oracle's value hash.
 
     r9 (same grain, same columns): the labeling is computed via an
     actual INCREMENTAL fold — the pair stream split into two batches
@@ -1438,9 +1199,9 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness against the full-history recursive-CTE twin, including
     genuine cross-batch cluster merges (the split provably merges
     batch-1 components at every shipped sf; pinned in
-    tests/test_components.py). The one-shot labeling framing (r8's
-    exact query) stays pinned as retired
-    ``neardup_components_oneshot``."""
+    tests/test_components.py). Min-id labels are canonical, so a
+    one-shot labeling has the same twin; the one-shot
+    ``neardup_clusters`` is DuckDB-pinned in tests/test_components.py."""
     from etl_pack_spark.operators.cache import truncated_persist
     from etl_pack_spark.operators.components import (
         cluster_dedup,
@@ -1488,46 +1249,6 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # survived flags are identical (pass-through docs never affect
     # winner selection) and the operator's full-corpus anti-join shape
     # is benched separately via pretrain_e2e / lib_pretrain_e2e
-    docs_c = docs.select("doc_id", "n_chars").join(
-        clusters.select("doc_id"), "doc_id", "left_semi"
-    )
-    kept = cluster_dedup(
-        docs_c, pairs, "doc_id", clusters=clusters, survivor_by="n_chars"
-    )
-    return clusters.join(
-        kept.select("doc_id", F.lit(True).alias("survived")), "doc_id", "left"
-    ).select(
-        "doc_id", "cluster_id",
-        F.coalesce("survived", F.lit(False)).alias("survived"),
-    )
-
-
-def q_neardup_components_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r8 framing (retired pin): clusters without the survivor
-    rider."""
-    from etl_pack_spark.operators.components import neardup_clusters
-
-    docs = read_table(spark, sf_dir, "documents")
-    pairs = neardup.simhash_neardup_pairs(docs, "doc_id", "text").select(
-        "id_a", "id_b"
-    )
-    return neardup_clusters(pairs, "doc_id")
-
-
-def q_neardup_components_oneshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r8 framing (retired pin): ONE-SHOT labeling + survivor
-    rider — displaced in r9 when the live slot's labeling moved to the
-    incremental ``update_clusters`` fold."""
-    from etl_pack_spark.operators.components import (
-        cluster_dedup,
-        neardup_clusters,
-    )
-
-    docs = read_table(spark, sf_dir, "documents")
-    pairs = neardup.simhash_neardup_pairs(docs, "doc_id", "text").select(
-        "id_a", "id_b"
-    )
-    clusters = neardup_clusters(pairs, "doc_id")
     docs_c = docs.select("doc_id", "n_chars").join(
         clusters.select("doc_id"), "doc_id", "left_semi"
     )
@@ -1608,11 +1329,6 @@ def q_lib_rolling_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_gopher_signals_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r10 framing (retired pin): signals + keep, no reason."""
-    return q_gopher_signals(spark, sf_dir).drop("drop_reason")
-
-
 def q_gopher_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher document-quality gates (Rae et al. 2021 A1.1): per-doc
     metrics + composed keep flag, map-only (operators/cleaning.py).
@@ -1684,14 +1400,6 @@ def q_repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return report.join(cleaned, "doc_id")
 
 
-def q_repeated_ngram_spans_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-r6 framing of the slot (detector only) — retired pin."""
-    from etl_pack_spark.operators.substrings import repeated_ngram_spans
-
-    docs = read_table(spark, sf_dir, "documents")
-    return repeated_ngram_spans(docs, k=5)
-
-
 def q_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget quality selection: exact global best-score prefix
     under a char budget, computed distributed via quantile-range
@@ -1706,15 +1414,6 @@ def q_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return budget_select(
         docs, BUDGET_CHARS, score_col="score", weight_col="n_chars"
     )
-
-
-def q_chunk_documents_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r6 chunk-only framing, retired r7 when the slot gained the
-    packing stage (kept DuckDB-pinned in tests/test_registry_merges.py)."""
-    from etl_pack_spark.operators.chunking import chunk_documents
-
-    docs = read_table(spark, sf_dir, "documents")
-    return chunk_documents(docs, "doc_id", "text", chunk_tokens=64, overlap=16)
 
 
 # chunk_uid = doc_id * 2^20 + chunk_idx — single packable key per chunk
@@ -1826,8 +1525,9 @@ def q_minhash_match_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # family pinned at h3_anti_join), kmv_distinct_sketch / text_vocab_topk
 # / pivot_events / text_sentiment→retired — freeing slots for
 # repeated_ngram_spans, budget_select, chunk_documents, shard_assign,
-# minhash_match_incremental. Every merged-away query keeps a pytest
-# DuckDB-parity pin via RETIRED_ORACLES below.
+# minhash_match_incremental. A merged-away framing keeps a pytest
+# DuckDB-parity pin in RETIRED_ORACLES below only while it is the sole
+# oracle pin of a public entry point (MIGRATION r18 lists the others).
 # Round 5 — five previously pytest-only operators gain driver-gated
 # oracle rows by riding existing slots (no slot count change):
 # html_strip + normalize_text ride c4_clean (same map-only projection
@@ -1838,8 +1538,8 @@ def q_minhash_match_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # generic hamming_neardup_pairs ride dedup_simhash_pairs (binary
 # modality union over a corpus-with-reingested-copies media table).
 # Round 9: neardup_components' labeling is computed THROUGH the
-# incremental update_clusters fold (one-shot framing retired as
-# neardup_components_oneshot); bm25_search becomes the hybrid
+# incremental update_clusters fold (the one-shot labeling has the same
+# twin); bm25_search becomes the hybrid
 # sparse⊕dense pipeline — batch BM25 + cosine top-k fused by RRF
 # (single-query framing retired as bm25_search_plain).
 QUERIES: dict[str, QueryFn] = {
@@ -2482,82 +2182,36 @@ ORACLES: dict[str, str] = {
     ),
 }
 
-# Former driver-gated oracles of merged-away registry entries: each
-# (query, oracle) pair stays pinned by tests/test_registry_merges.py
-# with the same DuckDB hash-parity rigor the driver applies, so registry
-# consolidation never loses coverage.
+# Former registry-slot oracles of merged-away registry entries. A
+# framing stays here only while it is the sole oracle pin of a public
+# entry point (or the headline bench times it); each (query, oracle)
+# pair is pinned by tests/test_registry_merges.py with the same DuckDB
+# hash-parity compare as tools/check_oracle.py. A framing whose behaviour a
+# live slot or an operator test already pins does not belong here.
 RETIRED_QUERIES: dict[str, QueryFn] = {
-    "t2_widen": q_t2_widen,
-    "agg_quantiles": q_agg_quantiles,
-    "json_extract": q_json_extract,
+    # media_metadata's only oracle pin
     "mm_binary_meta": q_mm_binary_meta,
+    # exact_dedup and the anti-join set op; both oracles are also run
+    # verbatim on spark.sql by tests/test_sql_surface.py
     "dedup_exact_docs": q_dedup_exact_docs,
-    # round-4 consolidation wave 2: slots freed for the round-4 ops
-    # (semantic_dedup, repeated_ngram_spans, budget_select,
-    # chunk_documents, shard_assign, minhash_match_incremental).
-    # cluster_embeddings (rows-only KMeans) has no oracle and is
-    # pytest-pinned in tests/test_similarity.py instead.
     "set_except": q_set_except,
-    "split_documents_plain": q_split_documents_plain,
-    "kmv_distinct_sketch": q_kmv_distinct_sketch,
-    "text_vocab_topk": q_text_vocab_topk,
-    "pivot_events": q_pivot_events,
+    # lexicon_sentiment: a headline bench query
     "text_sentiment": q_text_sentiment,
-    # round-6 riders: displaced framings of slots that GAINED stages
-    # (corpus_curate without the URL stage; IVF-flat with unrounded
-    # cosine — the r6 slot rounds to absorb the PQ rider's ulp)
+    # curate_corpus, the survivor-grain entry point (the live slot runs
+    # the disposition grain)
     "corpus_curate_plain": q_corpus_curate_plain,
+    # ivf_topk's default IVF-flat assignment with unrounded cosine (the
+    # live slot rounds to absorb the PQ rider's ulp)
     "ann_ivf_flat": lambda spark, sf_dir: similarity.ivf_topk(
         read_table(spark, sf_dir, "embeddings")
     ),
-    # r6 rider: the slot gained the excision half (remove_repeated_spans)
-    "repeated_ngram_spans_plain": q_repeated_ngram_spans_plain,
-    # r7 rider: the slot gained the sequence-packing stage
-    "chunk_documents_plain": q_chunk_documents_plain,
-    # r8 rider: the slot gained the quality-aware survivor column
-    "neardup_components_plain": q_neardup_components_plain,
-    # r9: the slot's labeling moved to the incremental update_clusters
-    # fold; the one-shot labeling + survivor framing stays pinned
-    "neardup_components_oneshot": q_neardup_components_oneshot,
-    # r9: the slot grew to the hybrid sparse⊕dense pipeline; the
-    # single-query BM25 framing stays pinned
+    # single-query bm25_topk (the live slot runs the batch hybrid)
     "bm25_search_plain": q_bm25_search_plain,
-    # r9: the slot flipped to eval-item grain; the train-doc-grain
-    # report stays pinned (and live inside decontaminate/pretrain)
-    "contamination_eval_trainside": q_contamination_eval_trainside,
-    # r10: the slot flipped to the full per-doc disposition grain
-    # (drop_stage audit); the survivor-only framing stays pinned
-    "c4_clean_plain": q_c4_clean_plain,
-    # r10 rider: the slot gained the drop_reason audit column
-    "gopher_signals_plain": q_gopher_signals_plain,
-    # r11: the slot flipped to the full per-doc disposition grain
-    # (url_dup/token_count/avg_token_len/lang_mismatch/exact_dup
-    # drop_stage audit, r10 VERDICT #2); the survivor-only URL+curate
-    # framing stays pinned
+    # dedup_by_url -> curate_corpus at corpus scale, survivors only
     "corpus_curate_kept": q_corpus_curate_kept,
-    # r11 rider: the slot gained the quality-drift PSI summary
-    "dq_profile_orders_plain": q_dq_profile_orders_plain,
 }
 
 RETIRED_ORACLES: dict[str, str] = {
-    "t2_widen": """
-        SELECT CAST(CAST(l_orderkey AS DECIMAL(20,0)) AS VARCHAR) AS k_u64,
-               CAST(l_linenumber AS INTEGER) AS n_u16,
-               CAST(l_quantity AS DOUBLE) AS qty_f64
-        FROM lineitem
-    """,
-    "agg_quantiles": """
-        SELECT l_returnflag,
-               quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.25) AS q25,
-               quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.5) AS q50,
-               quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.75) AS q75,
-               quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.99) AS q99
-        FROM lineitem GROUP BY l_returnflag
-    """,
-    "json_extract": """
-        SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-        FROM events
-    """,
     "mm_binary_meta": """
         SELECT doc_id AS media_id, 'text/plain' AS mime,
                CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
@@ -2573,118 +2227,12 @@ RETIRED_ORACLES: dict[str, str] = {
         EXCEPT
         SELECT DISTINCT o_custkey AS c_custkey FROM orders WHERE o_totalprice > 400000
     """,
-    "split_documents_plain": sampling.split_assign_sql(
-        "documents", "doc_id", select="doc_id, lang"
-    ),
-    "kmv_distinct_sketch": """
-        WITH h AS (
-            SELECT event_type, md5(CAST(user_id AS VARCHAR)) AS h FROM events
-        ),
-        g AS (
-            SELECT event_type,
-                   (list_sort(list_distinct(list(h))))[1:64] AS mins,
-                   COUNT(DISTINCT h) AS exact_distinct
-            FROM h GROUP BY event_type
-        )
-        SELECT event_type, exact_distinct,
-               CASE WHEN len(mins) < 64 THEN CAST(exact_distinct AS DOUBLE)
-                    ELSE CAST(63 AS DOUBLE)
-                         / (CAST(CAST('0x' || substr(mins[64], 1, 8) AS BIGINT) AS DOUBLE)
-                            / 4294967296.0)
-               END AS kmv_estimate
-        FROM g
-    """,
-    "text_vocab_topk": f"""
-        SELECT tok, COUNT(*) AS tf, COUNT(DISTINCT doc_id) AS df
-        FROM (SELECT doc_id, unnest({tokens_sql('text')}) AS tok FROM documents)
-        GROUP BY tok
-        ORDER BY tf DESC, tok
-        LIMIT 50
-    """,
-    "pivot_events": """
-        SELECT strftime(ts, '%Y-%m-%d') AS day,
-               COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS click,
-               COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS error,
-               COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
-               COUNT(CASE WHEN event_type = 'signup' THEN 1 END) AS signup,
-               COUNT(CASE WHEN event_type = 'view' THEN 1 END) AS view
-        FROM events GROUP BY 1
-    """,
     "text_sentiment": textops.lexicon_sentiment_sql("documents", "doc_id", "text"),
     "corpus_curate_plain": curate_corpus_sql("documents"),
     "ann_ivf_flat": similarity.ivf_topk_sql("embeddings"),
-    "repeated_ngram_spans_plain": _repeated_ngram_spans_sql("documents", k=5),
-    "chunk_documents_plain": _chunk_documents_sql(
-        "documents", "doc_id", "text", chunk_tokens=64, overlap=16
-    ),
-    "neardup_components_plain": f"""
-        SELECT id AS doc_id, cluster_id
-        FROM ({connected_components_sql(
-            neardup.simhash_neardup_pairs_sql("documents", "doc_id", "text")
-        )})
-    """,
-    # identical SQL to the live slot: min-id labels are canonical, so
-    # the one-shot and fold-computed labelings share one twin
-    "neardup_components_oneshot": f"""
-        WITH cc AS ({connected_components_sql(
-            neardup.simhash_neardup_pairs_sql("documents", "doc_id", "text")
-        )}),
-        m AS (
-            SELECT cc.id, cc.cluster_id,
-                   COALESCE(CAST(d.n_chars AS DOUBLE),
-                            CAST('-inf' AS DOUBLE)) AS s
-            FROM cc JOIN documents d ON d.doc_id = cc.id
-        ),
-        best AS (
-            SELECT cluster_id, max(s) AS b FROM m GROUP BY cluster_id
-        ),
-        win AS (
-            SELECT m.cluster_id, min(m.id) AS win_id
-            FROM m JOIN best ON m.cluster_id = best.cluster_id AND m.s = best.b
-            GROUP BY m.cluster_id
-        )
-        SELECT m.id AS doc_id, m.cluster_id, (m.id = w.win_id) AS survived
-        FROM m JOIN win w ON m.cluster_id = w.cluster_id
-    """,
     "bm25_search_plain": f"""
         SELECT id, round(score, 6) AS score
         FROM ({bm25_topk_sql("documents", "doc_id", "text", BM25_QUERY, k=20)})
-    """,
-    "contamination_eval_trainside": contamination_report_sql(
-        "(SELECT * FROM documents WHERE doc_id % 10 <> 7)",
-        "(SELECT * FROM documents WHERE doc_id % 10 = 7)",
-        n=8,
-    ),
-    "gopher_signals_plain": f"""
-        SELECT * EXCLUDE (drop_reason)
-        FROM ({gopher_signals_sql("documents", "doc_id", "text")})
-    """,
-    "c4_clean_plain": f"""
-        WITH base AS ({c4_clean_sql(
-            "documents", "doc_id", "text",
-            min_words=30, min_lines=1, badwords=["slow"], require_terminal=False,
-        )})
-        SELECT id, text_clean, n_lines, n_kept,
-               COALESCE(array_to_string({html_clean_lines_sql("text_clean")},
-                                        chr(10)), '') AS text_stripped,
-               {normalize_text_expr_sql("text_clean")} AS text_norm
-        FROM base
-    """,
-    "dq_profile_orders_plain": f"""
-        SELECT s.*, p.*, pp.* FROM (
-            SELECT o_orderpriority, COUNT(*) AS n_vals,
-                   CAST(SUM(CASE WHEN is_outlier THEN 1 ELSE 0 END) AS BIGINT)
-                       AS n_outliers,
-                   round(max(robust_z), 6) AS max_robust_z
-            FROM ({mad_outliers_sql(
-                "(SELECT o_orderpriority, CAST(o_totalprice AS DOUBLE) AS price FROM orders)",
-                "price", ["o_orderpriority"])})
-            GROUP BY 1
-        ) s CROSS JOIN ({profile_sql("orders", DQ_COLS, DQ_NUM)}) p
-        CROSS JOIN (
-            SELECT * EXCLUDE (n_rows), n_rows AS pii_n_docs
-            FROM ({pii_profile_sql("documents", PII_PROFILE_COLS)})
-        ) pp
     """,
     "corpus_curate_kept": f"""
         WITH uu AS (

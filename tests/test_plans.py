@@ -214,3 +214,41 @@ def test_guards_is_the_only_stats_and_probe_module():
         for m in pattern.finditer(text)
     ]
     assert offenders == []
+
+
+def test_every_package_function_is_referenced():
+    """Every top-level ``def``/``class`` of the package is named as a
+    word somewhere outside its own definition: in the package, the
+    tests, the tools, ``bench.py`` or ``perfbench/``. A function that
+    nothing names is dead code."""
+    import ast
+    import collections
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(suite.__file__).parent
+    repo = pkg.parent
+    files = [
+        *sorted(pkg.rglob("*.py")),
+        *sorted((repo / "tests").rglob("*.py")),
+        *sorted((repo / "tools").rglob("*.py")),
+        repo / "bench.py",
+        *sorted((repo / "perfbench").rglob("*.py")),
+    ]
+    word = re.compile(r"\w+")
+    texts = {path: path.read_text() for path in files}
+    total = collections.Counter(
+        w for text in texts.values() for w in word.findall(text)
+    )
+    unreferenced = []
+    for path in sorted(pkg.rglob("*.py")):
+        lines = texts[path].splitlines()
+        for node in ast.parse(texts[path]).body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                continue
+            own = "\n".join(lines[node.lineno - 1:node.end_lineno])
+            if total[node.name] == word.findall(own).count(node.name):
+                unreferenced.append(f"{path.relative_to(pkg)}:{node.name}")
+    assert unreferenced == []

@@ -316,6 +316,7 @@ def test_pretrain_funnel_cli(sf_dir):
          "--funnel", f"{sf_dir}/documents.parquet",
          "--funnel-gates", "pretrain"],
         capture_output=True, text=True, cwd="/root/repo", check=True,
+        timeout=600,
     )
     out = _json.loads(res.stdout.strip().splitlines()[-1])
     assert out["gates"] == "pretrain"
@@ -327,6 +328,7 @@ def test_pretrain_funnel_cli(sf_dir):
          "--funnel", f"{sf_dir}/documents.parquet",
          "--funnel-gates", "pretrain", "--min-words", "9"],
         capture_output=True, text=True, cwd="/root/repo",
+        timeout=600,
     )
     assert res2.returncode == 2
     assert "do not apply to --funnel-gates pretrain" in res2.stderr

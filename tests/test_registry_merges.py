@@ -1,7 +1,7 @@
-"""Registry-consolidation safety net: every query merged OUT of the
-50-entry driver registry keeps full DuckDB hash-parity here, with the
-same compare the driver applies (shared with tools/check_oracle.py via
-etl_pack_spark.oracle)."""
+"""Registry-consolidation safety net: every framing merged OUT of the
+50-entry query registry that is still the sole oracle pin of a public
+entry point keeps full DuckDB hash-parity here, with the same compare
+tools/check_oracle.py applies (shared via etl_pack_spark.oracle)."""
 
 from __future__ import annotations
 

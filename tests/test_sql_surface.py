@@ -20,8 +20,6 @@ ANSI_KEYS = [
     "p4_page",
     # agg_pricing_summary left r4: its oracle gained quantile_cont
     # (DuckDB spelling of percentile_cont) — no longer verbatim-ANSI.
-    # (t2_widen's oracle is not verbatim either: bare VARCHAR needs a
-    # length on Spark; its parity pin lives in test_registry_merges.)
     "join_revenue_by_nation",
     "tpch_q3_like",
     "tpch_q5_like",
