@@ -162,6 +162,7 @@ def postings_append(
     fresh :func:`postings_save` over the union corpus would hold."""
     from etl_pack_spark.streaming.incremental import (
         DEFAULT_LEASE_TTL_MS,
+        _append_stamped,
         _MonotoneStamps,
         _publish_stamp,
         _stamp_lease,
@@ -191,12 +192,11 @@ def postings_append(
         # postings FIRST, doclens second (module note: a crash between
         # the two must leave the new batch invisible, never a doc
         # resolving to an empty posting list)
-        build_postings(new_docs, id_col, text_col).withColumn(
-            "__batch", F.lit(stamp).cast("long")
-        ).write.mode("append").parquet(f"{path.rstrip('/')}/postings")
-        _doclens(new_docs, id_col, text_col).withColumn(
-            "__batch", F.lit(stamp).cast("long")
-        ).write.mode("append").parquet(f"{path.rstrip('/')}/doclens")
+        p = path.rstrip("/")
+        _append_stamped(
+            build_postings(new_docs, id_col, text_col), f"{p}/postings", stamp
+        )
+        _append_stamped(_doclens(new_docs, id_col, text_col), f"{p}/doclens", stamp)
         _publish_stamp(spark, path, stamp)
     return n
 

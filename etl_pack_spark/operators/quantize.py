@@ -857,31 +857,6 @@ def ivf_pq_manifest(spark, path: str) -> dict | None:
     return None if raw is None else json.loads(raw)
 
 
-def _read_codes(spark, path: str) -> DataFrame:
-    """Latest-wins read of the codes store: mergeSchema absorbs
-    pre-__batch legacy files (their rows read as batch -1), and each id
-    resolves to its highest-batch ``(cid, codes)`` via a combinable
-    ``max_by`` — so replayed/crashed appends collapse to one row per
-    id, the identical recovery rule as the signature store reads."""
-    codes = spark.read.option("mergeSchema", "true").parquet(f"{path}/codes")
-    if "__batch" not in codes.columns:
-        codes = codes.withColumn("__batch", F.lit(-1).cast("long"))
-    else:
-        codes = codes.withColumn(
-            "__batch",
-            F.coalesce(F.col("__batch").cast("long"), F.lit(-1).cast("long")),
-        )
-    return (
-        codes.groupBy("id")
-        .agg(
-            F.max_by(
-                F.struct(F.col("cid"), F.col("codes")), F.col("__batch")
-            ).alias("__s")
-        )
-        .select("id", "__s.cid", "__s.codes")
-    )
-
-
 def ivf_pq_load(spark, path: str):
     """Load a persisted IVF-PQ index: ``(cids, centroids, codebooks,
     encoded)`` exactly as :func:`ivf_pq_index` returned them. Only the
@@ -889,6 +864,7 @@ def ivf_pq_load(spark, path: str):
     distributed frame. Recovers an interrupted :func:`ivf_pq_save`
     swap first (restores the pre-save index from its backup)."""
     from etl_pack_spark.sinks.atomic import recover_swap
+    from etl_pack_spark.streaming.incremental import resolve_signature_store
 
     recover_swap(path)
     coarse = sorted(
@@ -903,7 +879,8 @@ def ivf_pq_load(spark, path: str):
     books = np.empty((m, kcent, dsub), dtype=np.float64)
     for r in rows:
         books[r["j"], r["c"]] = r["cvec"]
-    return cids, C, books, _read_codes(spark, path)
+    codes = resolve_signature_store(spark, f"{path}/codes", "id")
+    return cids, C, books, codes.select("id", "cid", "codes")
 
 
 def validate_ivf_pq_index(
@@ -977,69 +954,54 @@ def ivf_pq_append(
     effect of ingest. Returns the reloaded encoded frame (old + new).
 
     Caller contract: ids must be new (appending an EXISTING id is an
-    update — latest-wins on read — not a duplicate) and single-writer
-    per index directory — the same posture as the signature store.
+    update — latest-wins on read — not a duplicate).
 
-    Crash recovery: each append stamps its rows with an epoch-millis
-    ``__batch`` id and every read resolves each id to its
-    highest-batch row (:func:`_read_codes`), so an orchestrator
+    The codes store is an ordinary stamped store at ``path/codes``,
+    shared with the signature stores: each append stamps its rows with
+    a monotone epoch-millis ``__batch`` (``_MonotoneStamps``, seeded
+    from the ``path/codes.last_stamp.json`` sidecar, so a backwards
+    clock step cannot let an older append outrank a newer one) and
+    runs under the store's exclusive lease
+    (``path/codes.ingest_lease.json``), raising while another append or
+    :func:`ivf_pq_compact` holds it. Every read resolves each id to its
+    highest-batch row (``resolve_signature_store``), so an orchestrator
     retrying a crashed append re-writes rows that collapse on read —
     no duplicate neighbors, no manual cleanup. Dead superseded rows
-    accumulate like the signature store's; :func:`ivf_pq_compact`
-    rewrites the store to its resolved content (crash-safe swap)."""
-    import time as _time
-
-    cids, C, books, _ = ivf_pq_load(spark, path)
-    bc = spark.sparkContext.broadcast((cids, C, books))
-    new_codes = df.select(
-        F.col(id_col).alias("id"), F.col(vec).alias("v")
-    ).mapInPandas(
-        _encode_kernel(bc), schema="id long, cid long, codes array<smallint>"
+    accumulate until :func:`ivf_pq_compact` rewrites the store."""
+    from etl_pack_spark.streaming.incremental import (
+        _append_stamped,
+        _MonotoneStamps,
+        _stamp_lease,
+        resolve_signature_store,
     )
-    new_codes.withColumn(
-        "__batch", F.lit(int(_time.time() * 1000)).cast("long")
-    ).write.mode("append").parquet(f"{path}/codes")
-    return _read_codes(spark, path)
+
+    codes_path = f"{path}/codes"
+    with _stamp_lease(spark, codes_path):
+        cids, C, books, _ = ivf_pq_load(spark, path)
+        bc = spark.sparkContext.broadcast((cids, C, books))
+        new_codes = df.select(
+            F.col(id_col).alias("id"), F.col(vec).alias("v")
+        ).mapInPandas(
+            _encode_kernel(bc),
+            schema="id long, cid long, codes array<smallint>",
+        )
+        stamps = _MonotoneStamps(spark, codes_path)
+        _append_stamped(new_codes, codes_path, stamps.next())
+        stamps.publish(spark, codes_path)
+    return resolve_signature_store(spark, codes_path, "id").select(
+        "id", "cid", "codes"
+    )
 
 
 def ivf_pq_compact(spark, path: str) -> int:
     """Compact the codes store to its RESOLVED content — one row per id
-    at its latest batch (the same ``max_by(__batch)`` rule every read
-    applies, so query behavior is provably unchanged) — published via
-    the crash-safe staged/backup/rename swap. Returns the compacted
-    row count. The IVF-PQ analogue of
-    ``streaming.incremental.compact_signature_store``: appends and
-    retried appends accumulate superseded rows that every read filters
-    through; compaction makes store size proportional to live ids
-    again, and migrates legacy unstamped files to the stamped layout.
-    Single-writer per index directory, like the appends."""
-    from etl_pack_spark.sinks.atomic import (
-        clean_orphan_stages,
-        publish_swap,
-        recover_swap,
-        stage_dir,
-    )
+    at its latest batch, the rule every read applies, so query answers
+    are unchanged — via ``compact_signature_store`` on ``path/codes``:
+    crash-safe staged swap, the store's exclusive lease (raises while
+    an :func:`ivf_pq_append` holds it), and a published compaction
+    watermark so later loads take the merge-on-read path. Returns the
+    compacted row count. Legacy unstamped files migrate to the stamped
+    layout."""
+    from etl_pack_spark.streaming.incremental import compact_signature_store
 
-    codes_path = f"{path}/codes"
-    recover_swap(codes_path)
-    clean_orphan_stages(codes_path, "codes_stage_")
-    codes = spark.read.option("mergeSchema", "true").parquet(codes_path)
-    if "__batch" not in codes.columns:
-        codes = codes.withColumn("__batch", F.lit(-1).cast("long"))
-    else:
-        codes = codes.withColumn(
-            "__batch",
-            F.coalesce(F.col("__batch").cast("long"), F.lit(-1).cast("long")),
-        )
-    resolved = (
-        codes.groupBy("id")
-        .agg(
-            F.max_by(F.struct("cid", "codes"), "__batch").alias("__s"),
-            F.max("__batch").alias("__batch"),
-        )
-        .select("id", "__s.cid", "__s.codes", "__batch")
-    )
-    staged = stage_dir(codes_path, prefix="codes_stage_")
-    resolved.write.mode("overwrite").parquet(staged)
-    publish_swap(staged, codes_path)
-    return spark.read.parquet(codes_path).count()
+    return compact_signature_store(spark, f"{path}/codes", "id")

@@ -123,6 +123,40 @@ def _latest_committed_batch(spark: SparkSession, checkpoint: str) -> int:
     return latest
 
 
+def _fire(stream: DataFrame, checkpoint: str, fold) -> int:
+    """One ``availableNow`` firing: run ``fold(batch_df, batch_id)``
+    over every micro-batch the checkpoint has not yet seen, then exit.
+    Returns the number of micro-batches, counted in the callback
+    itself: ``query.recentProgress`` is capped at
+    ``spark.sql.streaming.numRecentProgressUpdates`` (default 100), so
+    a larger backlog drained in one firing would under-report through
+    it."""
+    seen_batches: list[int] = []
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        seen_batches.append(batch_id)
+        fold(batch_df, batch_id)
+
+    query = (
+        stream.writeStream.foreachBatch(run)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+    query.awaitTermination()
+    query.stop()
+    return len(seen_batches)
+
+
+def _append_stamped(df: DataFrame, path: str, stamp: int) -> None:
+    """Append ``df`` to the stamped store at ``path`` with every row
+    carrying ``__batch = stamp`` (a long; see :class:`_MonotoneStamps`
+    for where stamps come from)."""
+    df.withColumn("__batch", F.lit(stamp).cast("long")).write.mode(
+        "append"
+    ).parquet(path)
+
+
 def stream_transfer(
     spark: SparkSession,
     source_dir: str,
@@ -168,15 +202,7 @@ def stream_incremental_transfer(
     reference's re-runs, provider.go:218)."""
     from etl_pack_spark.sinks.fsio import exists as fs_exists
 
-    stream = _events_stream(spark, source_dir)
-
-    # count batches in the callback (round-14 VERDICT #2): recentProgress
-    # is capped at numRecentProgressUpdates (default 100) and under-counts
-    # a larger backlog drained in one availableNow firing
-    seen_batches: list[int] = []
-
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        seen_batches.append(batch_id)
         snap = None
         # scheme-aware (r9): a missed probe on an object-store target
         # would skip the snapshot anti-join and re-append every batch
@@ -185,15 +211,7 @@ def stream_incremental_transfer(
         new_rows = incremental_filter(batch_df, snap)
         new_rows.write.mode("append").parquet(target_path)
 
-    query = (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    query.awaitTermination()
-    query.stop()
-    return len(seen_batches)
+    return _fire(_events_stream(spark, source_dir), checkpoint, upsert)
 
 
 def stream_cdc_apply(
@@ -246,12 +264,7 @@ def stream_cdc_apply(
 
     schema = spark.read.parquet(source_dir).schema
 
-    # uncapped batch counter (round-14 VERDICT #2; recentProgress caps
-    # at numRecentProgressUpdates, default 100)
-    seen_batches: list[int] = []
-
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        seen_batches.append(batch_id)
         sess = batch_df.sparkSession
         # crash recovery: a previous firing died mid-swap (the
         # checkpoint will replay that batch after the restore); a
@@ -275,15 +288,7 @@ def stream_cdc_apply(
         publish_swap(staged, target_path)
 
     stream = spark.readStream.schema(schema).parquet(source_dir)
-    query = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    query.awaitTermination()
-    query.stop()
-    return len(seen_batches)
+    return _fire(stream, checkpoint, fold)
 
 
 def _source_schema_or_none(spark: SparkSession, path: str):
@@ -389,14 +394,7 @@ def stream_quality_drift(
         if schema is None:
             return 0  # dir exists but holds no data files yet
 
-    # count batches in the callback itself: query.recentProgress is
-    # capped at spark.sql.streaming.numRecentProgressUpdates (default
-    # 100), so a large backlog drained in one availableNow firing
-    # would under-report through it
-    seen_batches: list[int] = []
-
     def check(batch_df: DataFrame, batch_id: int) -> None:
-        seen_batches.append(batch_id)
         if not batch_df.take(1):
             return  # an empty replay batch has no histogram to score
         sess = batch_df.sparkSession
@@ -418,16 +416,8 @@ def stream_quality_drift(
             detail=str(batch_id),
         )
 
-    query = (
-        spark.readStream.schema(schema).parquet(source_path)
-        .writeStream.foreachBatch(check)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    query.awaitTermination()
-    query.stop()
-    return len(seen_batches)
+    stream = spark.readStream.schema(schema).parquet(source_path)
+    return _fire(stream, checkpoint, check)
 
 
 def dedup_stream(events: DataFrame, key_cols: list[str], watermark: str = "2 hours") -> DataFrame:
@@ -509,23 +499,6 @@ def stream_neardup_ingest(
     firing's uncommitted stamps, and the fold's "below the floor means
     fully committed" invariant would silently break.
     """
-    schema = spark.read.parquet(source_dir).schema
-    # ONE FIRING AT A TIME per store (r10 ADVICE — now enforced, not
-    # assumed): the lease covers the whole firing, from the sidecar
-    # seed to the post-commit publishes, so no concurrent firing can
-    # seed from the same sidecar and publish a floor above this
-    # firing's still-uncommitted stamps
-    with _stamp_lease(spark, store_path, ttl_ms=lease_ttl_ms):
-        return _neardup_ingest_leased(
-            spark, source_dir, store_path, matches_path, checkpoint,
-            id_col, text_col, k, num_hashes, bands, min_est, schema,
-        )
-
-
-def _neardup_ingest_leased(
-    spark, source_dir, store_path, matches_path, checkpoint,
-    id_col, text_col, k, num_hashes, bands, min_est, schema,
-) -> int:
     from etl_pack_spark.operators.neardup import (
         minhash_match_incremental,
         minhash_signature,
@@ -533,68 +506,62 @@ def _neardup_ingest_leased(
     from etl_pack_spark.operators.tokenize import shingle_rows
     from etl_pack_spark.sinks.fsio import exists as fs_exists
 
-    # one stamper per firing, seeded from the store's sidecar (r9):
-    # stamps are monotone by construction, not by trusting the clock
-    stamps = _MonotoneStamps(spark, store_path)
+    schema = spark.read.parquet(source_dir).schema
+    # ONE FIRING AT A TIME per store, enforced: the lease covers the
+    # whole firing, from the sidecar seed to the post-commit publishes,
+    # so no concurrent firing can seed from the same sidecar and
+    # publish a floor above this firing's still-uncommitted stamps
+    with _stamp_lease(spark, store_path, ttl_ms=lease_ttl_ms):
+        # one stamper per firing, seeded from the store's sidecar:
+        # stamps are monotone by construction, not by trusting the clock
+        stamps = _MonotoneStamps(spark, store_path)
 
-    # uncapped batch counter (round-14 VERDICT #2)
-    seen_batches: list[int] = []
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        seen_batches.append(batch_id)
-        sess = batch_df.sparkSession
-        batch = batch_df.select(id_col, text_col)
-        sig_batch = minhash_signature(
-            shingle_rows(batch, id_col, text_col, k, distinct=False),
-            id_col,
-            num_hashes,
-        )
-        # scheme-aware probe (r9): os.path here read an s3a: store as
-        # absent — EXISTING history silently skipped, missed dedup
-        if fs_exists(sess, store_path):
-            sig_old = (
-                resolve_signature_store(sess, store_path, id_col)
-                .drop("__batch")
-                # replay absorber: a batch whose signatures already
-                # landed must not self-match against them
-                .join(batch.select(id_col), id_col, "left_anti")
+        def fold(batch_df: DataFrame, batch_id: int) -> None:
+            sess = batch_df.sparkSession
+            batch = batch_df.select(id_col, text_col)
+            sig_batch = minhash_signature(
+                shingle_rows(batch, id_col, text_col, k, distinct=False),
+                id_col,
+                num_hashes,
             )
-        else:
-            sig_old = sig_batch.limit(0)
-        matches = minhash_match_incremental(
-            batch, sig_old, id_col, text_col,
-            k=k, num_hashes=num_hashes, bands=bands, min_est=min_est,
-        )
-        # matches carry the same monotone epoch-millis stamp (r8/r9) so
-        # downstream incremental consumers (update_cluster_store) can
-        # fold only the not-yet-processed tail; pair-reading code keeps
-        # taking DISTINCT over the deterministic (id_a, id_b, est) cols
-        stamp = stamps.next()
-        matches.withColumn(
-            "__batch", F.lit(stamp).cast("long")
-        ).write.mode("append").parquet(matches_path)
-        # append AFTER the match (the match plan reads the pre-batch store)
-        sig_batch.withColumn(
-            "__batch", F.lit(stamp).cast("long")
-        ).write.mode("append").parquet(store_path)
+            # scheme-aware probe: os.path here read an s3a: store as
+            # absent — EXISTING history silently skipped, missed dedup
+            if fs_exists(sess, store_path):
+                sig_old = (
+                    resolve_signature_store(sess, store_path, id_col)
+                    .drop("__batch")
+                    # replay absorber: a batch whose signatures already
+                    # landed must not self-match against them
+                    .join(batch.select(id_col), id_col, "left_anti")
+                )
+            else:
+                sig_old = sig_batch.limit(0)
+            matches = minhash_match_incremental(
+                batch, sig_old, id_col, text_col,
+                k=k, num_hashes=num_hashes, bands=bands, min_est=min_est,
+            )
+            # matches carry the same monotone epoch-millis stamp so
+            # downstream incremental consumers (update_cluster_store)
+            # can fold only the not-yet-processed tail; pair-reading
+            # code keeps taking DISTINCT over the deterministic
+            # (id_a, id_b, est) cols
+            stamp = stamps.next()
+            _append_stamped(matches, matches_path, stamp)
+            # append AFTER the match (the match plan reads the
+            # pre-batch store)
+            _append_stamped(sig_batch, store_path, stamp)
 
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    query = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    query.awaitTermination()
-    query.stop()
-    stamps.publish(spark, store_path)
-    # the matches sink gets the same sidecar (r9 ADVICE): published
-    # only AFTER every micro-batch committed, so the fold's safety-lag
-    # cutoff can treat stamps <= this floor as provably fully listed —
-    # closing the starvation window where a backwards NTP step leaves
-    # monotone stamps ahead of wall-clock until the clock catches up
-    stamps.publish(spark, matches_path)
-    return len(seen_batches)
+        stream = spark.readStream.schema(schema).parquet(source_dir)
+        n = _fire(stream, checkpoint, fold)
+        stamps.publish(spark, store_path)
+        # the matches sink gets the same sidecar, published only AFTER
+        # every micro-batch committed, so the fold's safety-lag cutoff
+        # can treat stamps <= this floor as provably fully listed —
+        # closing the starvation window where a backwards NTP step
+        # leaves monotone stamps ahead of wall-clock until the clock
+        # catches up
+        stamps.publish(spark, matches_path)
+    return n
 
 
 def stream_media_dedup_ingest(
@@ -632,79 +599,55 @@ def stream_media_dedup_ingest(
     ``fake=True`` hashes raw bytes (md5 prefix) so the plumbing runs
     on non-image fixtures — identical plan shape, pinned in tests.
     Returns the number of micro-batches processed."""
-    schema = spark.read.parquet(source_dir).schema
-    with _stamp_lease(spark, store_path, ttl_ms=lease_ttl_ms):
-        return _media_dedup_ingest_leased(
-            spark, source_dir, store_path, matches_path, checkpoint,
-            media_id_col, content_col, max_hamming, schema, fake,
-        )
-
-
-def _media_dedup_ingest_leased(
-    spark, source_dir, store_path, matches_path, checkpoint,
-    media_id_col, content_col, max_hamming, schema, fake,
-) -> int:
     from etl_pack_spark.operators.cache import pooled_persist
     from etl_pack_spark.operators.multimodal import image_dhash
     from etl_pack_spark.operators.neardup import hamming_match_incremental
     from etl_pack_spark.sinks.fsio import exists as fs_exists
 
-    stamps = _MonotoneStamps(spark, store_path)
+    schema = spark.read.parquet(source_dir).schema
+    with _stamp_lease(spark, store_path, ttl_ms=lease_ttl_ms):
+        stamps = _MonotoneStamps(spark, store_path)
 
-    # uncapped batch counter (round-14 VERDICT #2 pattern)
-    seen_batches: list[int] = []
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        seen_batches.append(batch_id)
-        sess = batch_df.sparkSession
-        media = batch_df.select(
-            F.col(media_id_col).alias("media_id"),
-            F.col(content_col).alias("content"),
-        )
-        # persist the batch signatures: the pixel decode is the
-        # expensive leg and feeds BOTH the match plan and the store
-        # append — it must run once per batch, not twice
-        sig_batch = pooled_persist(
-            image_dhash(media, fake=fake)
-            .where(F.col("dhash").isNotNull())
-            .select(F.col("media_id").alias(media_id_col), "dhash")
-        )
-        if fs_exists(sess, store_path):
-            sig_old = (
-                resolve_signature_store(sess, store_path, media_id_col)
-                .drop("__batch")
-                # replay absorber: a batch whose signatures already
-                # landed must not self-match against them
-                .join(sig_batch.select(media_id_col),
-                      media_id_col, "left_anti")
+        def fold(batch_df: DataFrame, batch_id: int) -> None:
+            sess = batch_df.sparkSession
+            media = batch_df.select(
+                F.col(media_id_col).alias("media_id"),
+                F.col(content_col).alias("content"),
             )
-        else:
-            sig_old = sig_batch.limit(0)
-        matches = hamming_match_incremental(
-            sig_batch, sig_old, media_id_col, "dhash",
-            max_hamming=max_hamming,
-        )
-        stamp = stamps.next()
-        matches.withColumn(
-            "__batch", F.lit(stamp).cast("long")
-        ).write.mode("append").parquet(matches_path)
-        # append AFTER the match (the match plan reads the pre-batch store)
-        sig_batch.withColumn(
-            "__batch", F.lit(stamp).cast("long")
-        ).write.mode("append").parquet(store_path)
+            # persist the batch signatures: the pixel decode is the
+            # expensive leg and feeds BOTH the match plan and the store
+            # append — it must run once per batch, not twice
+            sig_batch = pooled_persist(
+                image_dhash(media, fake=fake)
+                .where(F.col("dhash").isNotNull())
+                .select(F.col("media_id").alias(media_id_col), "dhash")
+            )
+            if fs_exists(sess, store_path):
+                sig_old = (
+                    resolve_signature_store(sess, store_path, media_id_col)
+                    .drop("__batch")
+                    # replay absorber: a batch whose signatures already
+                    # landed must not self-match against them
+                    .join(sig_batch.select(media_id_col),
+                          media_id_col, "left_anti")
+                )
+            else:
+                sig_old = sig_batch.limit(0)
+            matches = hamming_match_incremental(
+                sig_batch, sig_old, media_id_col, "dhash",
+                max_hamming=max_hamming,
+            )
+            stamp = stamps.next()
+            _append_stamped(matches, matches_path, stamp)
+            # append AFTER the match (the match plan reads the
+            # pre-batch store)
+            _append_stamped(sig_batch, store_path, stamp)
 
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    query = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    query.awaitTermination()
-    query.stop()
-    stamps.publish(spark, store_path)
-    stamps.publish(spark, matches_path)
-    return len(seen_batches)
+        stream = spark.readStream.schema(schema).parquet(source_dir)
+        n = _fire(stream, checkpoint, fold)
+        stamps.publish(spark, store_path)
+        stamps.publish(spark, matches_path)
+    return n
 
 
 def stream_url_dedup_ingest(
@@ -750,71 +693,50 @@ def stream_url_dedup_ingest(
     store, enforced by the same lease as
     :func:`stream_neardup_ingest` (r10 ADVICE).
     """
-    schema = spark.read.parquet(source_dir).schema
-    with _stamp_lease(spark, store_path, ttl_ms=lease_ttl_ms):
-        return _url_dedup_ingest_leased(
-            spark, source_dir, store_path, out_path, checkpoint,
-            url_col, id_col, schema,
-        )
-
-
-def _url_dedup_ingest_leased(
-    spark, source_dir, store_path, out_path, checkpoint,
-    url_col, id_col, schema,
-) -> int:
     from etl_pack_spark.operators.urls import dedup_by_url
     from etl_pack_spark.sinks.fsio import exists as fs_exists
 
-    stamps = _MonotoneStamps(spark, store_path)
+    schema = spark.read.parquet(source_dir).schema
+    with _stamp_lease(spark, store_path, ttl_ms=lease_ttl_ms):
+        stamps = _MonotoneStamps(spark, store_path)
 
-    # uncapped batch counter (round-14 VERDICT #2)
-    seen_batches: list[int] = []
+        def fold(batch_df: DataFrame, batch_id: int) -> None:
+            sess = batch_df.sparkSession
+            batch = dedup_by_url(batch_df, url_col, id_col)
+            with_url = batch.where(F.col("canonical_url").isNotNull())
+            nulls = batch.where(F.col("canonical_url").isNull())
+            # scheme-aware probe: an os.path miss on an object-store
+            # path would re-admit every previously-seen URL
+            if fs_exists(sess, store_path):
+                store = sess.read.parquet(store_path).select("canonical_url")
+                fresh = with_url.join(store, "canonical_url", "left_anti")
+            else:
+                fresh = with_url
+            # persist: the out-path and store writes below would
+            # otherwise EACH recompute the canonicalize+window lineage
+            # and rescan the persisted store (which grows with every
+            # admitted URL)
+            fresh = fresh.persist()
+            try:
+                # output BEFORE store: a crash between the two re-emits
+                # the batch's survivors on replay (at-least-once output)
+                # instead of silently dropping them (store-first would
+                # anti-join the replay away with nothing written)
+                fresh.unionByName(nulls).write.mode("append").parquet(out_path)
+                _append_stamped(
+                    fresh.select(
+                        "canonical_url", F.col(id_col).alias("winner_id")
+                    ),
+                    store_path,
+                    stamps.next(),
+                )
+            finally:
+                fresh.unpersist()
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        seen_batches.append(batch_id)
-        sess = batch_df.sparkSession
-        batch = dedup_by_url(batch_df, url_col, id_col)
-        with_url = batch.where(F.col("canonical_url").isNotNull())
-        nulls = batch.where(F.col("canonical_url").isNull())
-        # scheme-aware probe (r9): an os.path miss on an object-store
-        # path would re-admit every previously-seen URL
-        if fs_exists(sess, store_path):
-            store = sess.read.parquet(store_path).select("canonical_url")
-            fresh = with_url.join(store, "canonical_url", "left_anti")
-        else:
-            fresh = with_url
-        # persist: the out-path and store writes below would otherwise
-        # EACH recompute the canonicalize+window lineage and rescan the
-        # persisted store (which grows with every admitted URL)
-        fresh = fresh.persist()
-        try:
-            out = fresh.unionByName(nulls)
-            # output BEFORE store: a crash between the two re-emits the
-            # batch's survivors on replay (at-least-once output) instead
-            # of silently dropping them (store-first would anti-join the
-            # replay away with nothing written)
-            out.write.mode("append").parquet(out_path)
-            fresh.select(
-                "canonical_url", F.col(id_col).alias("winner_id")
-            ).withColumn(
-                "__batch", F.lit(stamps.next()).cast("long")
-            ).write.mode(
-                "append"
-            ).parquet(store_path)
-        finally:
-            fresh.unpersist()
-
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    query = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    query.awaitTermination()
-    query.stop()
-    stamps.publish(spark, store_path)
-    return len(seen_batches)
+        stream = spark.readStream.schema(schema).parquet(source_dir)
+        n = _fire(stream, checkpoint, fold)
+        stamps.publish(spark, store_path)
+    return n
 
 
 def _stamp_sidecar(store_path: str) -> str:
@@ -1096,6 +1018,33 @@ def _write_compaction_marker(
     )
 
 
+def _read_stamped(spark: SparkSession, path: str) -> DataFrame:
+    """Every physical row of a stamped store, ``__batch`` as a long
+    with legacy unstamped rows at -1 (see
+    :func:`resolve_signature_store` for why mergeSchema + coalesce)."""
+    rows = spark.read.option("mergeSchema", "true").parquet(path)
+    stamp = F.col("__batch") if "__batch" in rows.columns else F.lit(None)
+    return rows.withColumn(
+        "__batch", F.coalesce(stamp.cast("long"), F.lit(-1).cast("long"))
+    )
+
+
+def _resolve_latest(rows: DataFrame, id_col: str) -> DataFrame:
+    """One row per id: the highest-``__batch`` payload (a combinable
+    ``max_by``), carrying that ``__batch``."""
+    payload = [c for c in rows.columns if c not in (id_col, "__batch")]
+    return (
+        rows.groupBy(id_col)
+        .agg(
+            F.max_by(F.struct(*payload), "__batch").alias("__s"),
+            F.max("__batch").alias("__batch"),
+        )
+        .select(
+            id_col, *[F.col(f"__s.{c}").alias(c) for c in payload], "__batch"
+        )
+    )
+
+
 def resolve_signature_store(
     spark: SparkSession, store_path: str, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1124,32 +1073,10 @@ def resolve_signature_store(
     stamp or NULL legacy rows, and ``max_by`` IGNORES null keys —
     which would silently drop legacy signatures instead of letting
     any stamped rewrite win."""
-    store = spark.read.option("mergeSchema", "true").parquet(store_path)
-    if "__batch" not in store.columns:
-        store = store.withColumn("__batch", F.lit(-1))
-    else:
-        store = store.withColumn(
-            "__batch", F.coalesce(F.col("__batch"), F.lit(-1))
-        )
-    payload = [c for c in store.columns if c not in (id_col, "__batch")]
-
-    def _resolve(rows: DataFrame) -> DataFrame:
-        return (
-            rows.groupBy(id_col)
-            .agg(
-                F.max_by(F.struct(*payload), "__batch").alias("__s"),
-                F.max("__batch").alias("__batch"),
-            )
-            .select(
-                id_col,
-                *[F.col(f"__s.{c}").alias(c) for c in payload],
-                "__batch",
-            )
-        )
-
+    store = _read_stamped(spark, store_path)
     wm = compaction_watermark(spark, store_path)
     if wm is None:
-        return _resolve(store)
+        return _resolve_latest(store, id_col)
     from etl_pack_spark.operators.cache import pooled_persist
     from etl_pack_spark.operators.guards import maybe_broadcast
 
@@ -1158,7 +1085,7 @@ def resolve_signature_store(
     # persisted: the resolved tail feeds BOTH the anti-join build side
     # and the union, and the guard's size probe must not re-run the
     # tail aggregation a third time
-    tail_res = pooled_persist(_resolve(tail))
+    tail_res = pooled_persist(_resolve_latest(tail, id_col))
     # tail always outranks base (its stamps exceed the watermark), so
     # override = drop base rows whose id reappears in the tail. The
     # tail is bounded by compaction CADENCE, not by construction — a
@@ -1261,19 +1188,6 @@ def update_cluster_store(
     the clusters store) may legitimately overlap — that overlap is
     exactly what ``safety_lag_ms`` + the matches sidecar floor
     handle."""
-    with _stamp_lease(spark, clusters_path, ttl_ms=lease_ttl_ms):
-        return _update_cluster_store_leased(
-            spark, clusters_path, matches_path, safety_lag_ms, return_total
-        )
-
-
-def _update_cluster_store_leased(
-    spark: SparkSession,
-    clusters_path: str,
-    matches_path: str,
-    safety_lag_ms: int,
-    return_total: bool,
-) -> int:
     import json
     import time as _time
 
@@ -1284,95 +1198,91 @@ def _update_cluster_store_leased(
     from etl_pack_spark.sinks.fsio import exists as fs_exists
     from etl_pack_spark.sinks.fsio import read_text, write_text
 
-    # the sidecar floor MUST be read BEFORE the matches listing (the
-    # parquet read builds its file index eagerly right here): a floor
-    # visible before the listing began proves that firing's files were
-    # all committed before the listing, so stamps <= floor are fully
-    # listed. Read in the other order, a firing finishing in between
-    # raises the floor over a PARTIALLY-listed stamp and the fold would
-    # watermark past its unseen files (r10 self-review).
-    matches_floor = (
-        _stamp_floor(spark, matches_path) if safety_lag_ms > 0 else 0
-    )
-    matches = spark.read.option("mergeSchema", "true").parquet(matches_path)
-    if "__batch" not in matches.columns:
-        matches = matches.withColumn("__batch", F.lit(-1).cast("long"))
-    else:
-        matches = matches.withColumn(
-            "__batch", F.coalesce(F.col("__batch"), F.lit(-1).cast("long"))
+    with _stamp_lease(spark, clusters_path, ttl_ms=lease_ttl_ms):
+        # the sidecar floor MUST be read BEFORE the matches listing (the
+        # parquet read builds its file index eagerly right here): a floor
+        # visible before the listing began proves that firing's files
+        # were all committed before the listing, so stamps <= floor are
+        # fully listed. Read in the other order, a firing finishing in
+        # between raises the floor over a PARTIALLY-listed stamp and the
+        # fold would watermark past its unseen files.
+        matches_floor = (
+            _stamp_floor(spark, matches_path) if safety_lag_ms > 0 else 0
         )
-    raw = read_text(spark, _clusters_fold_marker(clusters_path))
-    folded_through = (
-        int(json.loads(raw)["folded_through_batch"]) if raw is not None else None
-    )
-    tail = matches if folded_through is None else matches.where(
-        F.col("__batch") > folded_through
-    )
-    if safety_lag_ms > 0:
-        # concurrent-ingest guard (see docstring): stamps too young to
-        # be provably fully-listed stay in the tail of the NEXT firing.
-        # The cutoff is lower-bounded by the matches sidecar floor
-        # (published by the ingest only after every micro-batch
-        # committed), so stamps a backwards NTP step left ahead of
-        # wall-clock still fold once their firing finished — without
-        # the floor they would starve until the clock caught up
-        # (r9 ADVICE). The floor was read before the listing (above).
-        cutoff = max(int(_time.time() * 1000) - int(safety_lag_ms),
-                     matches_floor)
-        tail = tail.where(F.col("__batch") <= cutoff)
-    # persist: the fold consumes the pairs through several jobs (the
-    # components probe + loop) and the watermark needs their max stamp
-    tail = tail.select("id_a", "id_b", "__batch").persist()
-    try:
-        agg = tail.agg(
-            F.max("__batch").alias("wm"), F.count(F.lit(1)).alias("n")
-        ).first()
-        # scheme-aware probe (r9 — the r8 weak): os.path here read an
-        # s3a: clusters store as absent, so every firing relabeled from
-        # ONLY the new tail and the history-blind labels won latest-wins
-        exists = fs_exists(spark, clusters_path)
-        if agg["n"] == 0:
-            # nothing new: the store (possibly absent) is untouched —
-            # and the default return does NOT resolve it (delta = 0)
-            if return_total:
-                return read_cluster_store(spark, clusters_path).count() if exists else 0
-            return 0
-        pairs = tail.select("id_a", "id_b").distinct()
-        if exists:
-            labels = read_cluster_store(spark, clusters_path)
-            updated = update_clusters(labels, pairs)
-            delta = (
-                updated.join(
-                    labels.withColumnRenamed("cluster_id", "__old"), "id", "left"
-                )
-                .where(
-                    F.col("__old").isNull()
-                    | (F.col("__old") != F.col("cluster_id"))
-                )
-                .select("id", "cluster_id")
-            )
-        else:
-            delta = connected_components(pairs).select("id", "cluster_id")
-        # materialize the delta BEFORE appending: its plan reads the
-        # store being appended to (self-append hazard otherwise)
-        delta = delta.persist()
+        matches = _read_stamped(spark, matches_path)
+        raw = read_text(spark, _clusters_fold_marker(clusters_path))
+        folded_through = (
+            int(json.loads(raw)["folded_through_batch"])
+            if raw is not None else None
+        )
+        tail = matches if folded_through is None else matches.where(
+            F.col("__batch") > folded_through
+        )
+        if safety_lag_ms > 0:
+            # concurrent-ingest guard (see docstring): stamps too young
+            # to be provably fully-listed stay in the tail of the NEXT
+            # firing. The cutoff is lower-bounded by the matches sidecar
+            # floor (published by the ingest only after every
+            # micro-batch committed), so stamps a backwards NTP step
+            # left ahead of wall-clock still fold once their firing
+            # finished — without the floor they would starve until the
+            # clock caught up. The floor was read before the listing
+            # (above).
+            cutoff = max(int(_time.time() * 1000) - int(safety_lag_ms),
+                         matches_floor)
+            tail = tail.where(F.col("__batch") <= cutoff)
+        # persist: the fold consumes the pairs through several jobs (the
+        # components probe + loop) and the watermark needs their max stamp
+        tail = tail.select("id_a", "id_b", "__batch").persist()
         try:
-            n_delta = delta.count()
-            stamps = _MonotoneStamps(spark, clusters_path)
-            delta.withColumn(
-                "__batch", F.lit(stamps.next()).cast("long")
-            ).write.mode("append").parquet(clusters_path)
-            stamps.publish(spark, clusters_path)
+            agg = tail.agg(
+                F.max("__batch").alias("wm"), F.count(F.lit(1)).alias("n")
+            ).first()
+            # scheme-aware probe: os.path here read an s3a: clusters
+            # store as absent, so every firing relabeled from ONLY the
+            # new tail and the history-blind labels won latest-wins
+            exists = fs_exists(spark, clusters_path)
+            if agg["n"] == 0:
+                # nothing new: the store (possibly absent) is untouched —
+                # and the default return does NOT resolve it (delta = 0)
+                if return_total and exists:
+                    return read_cluster_store(spark, clusters_path).count()
+                return 0
+            pairs = tail.select("id_a", "id_b").distinct()
+            if exists:
+                labels = read_cluster_store(spark, clusters_path)
+                updated = update_clusters(labels, pairs)
+                delta = (
+                    updated.join(
+                        labels.withColumnRenamed("cluster_id", "__old"),
+                        "id", "left",
+                    )
+                    .where(
+                        F.col("__old").isNull()
+                        | (F.col("__old") != F.col("cluster_id"))
+                    )
+                    .select("id", "cluster_id")
+                )
+            else:
+                delta = connected_components(pairs).select("id", "cluster_id")
+            # materialize the delta BEFORE appending: its plan reads the
+            # store being appended to (self-append hazard otherwise)
+            delta = delta.persist()
+            try:
+                n_delta = delta.count()
+                stamps = _MonotoneStamps(spark, clusters_path)
+                _append_stamped(delta, clusters_path, stamps.next())
+                stamps.publish(spark, clusters_path)
+            finally:
+                delta.unpersist(False)
+            # marker AFTER the append (see crash-safety note above)
+            write_text(
+                spark,
+                _clusters_fold_marker(clusters_path),
+                json.dumps({"folded_through_batch": int(agg["wm"])}),
+            )
         finally:
-            delta.unpersist(False)
-        # marker AFTER the append (see crash-safety note above)
-        write_text(
-            spark,
-            _clusters_fold_marker(clusters_path),
-            json.dumps({"folded_through_batch": int(agg["wm"])}),
-        )
-    finally:
-        tail.unpersist(False)
+            tail.unpersist(False)
     if return_total:
         return read_cluster_store(spark, clusters_path).count()
     return n_delta
@@ -1395,10 +1305,13 @@ def compact_signature_store(
     idempotent, so compaction changes NO observable matching behavior
     (pinned in tests); it just makes the store's size proportional to
     live ids again. Run it from the same scheduler as the ingest
-    firings (single-writer per store, like every sink here), e.g.
-    after every N firings. Legacy rows (no ``__batch``) resolve at
-    batch -1 and come out stamped — compaction also migrates old
-    stores to the stamped layout."""
+    firings, e.g. after every N firings. It runs under the store's
+    exclusive lease (:func:`_stamp_lease`, default TTL) and raises while
+    an ingest holds it: an append landing between the compaction's read
+    and its swap would go to the backup directory the swap deletes,
+    losing those rows without an error. Legacy rows (no ``__batch``)
+    resolve at batch -1 and come out stamped — compaction also migrates
+    old stores to the stamped layout."""
     from etl_pack_spark.sinks.atomic import (
         clean_orphan_stages,
         publish_swap,
@@ -1406,43 +1319,33 @@ def compact_signature_store(
         stage_dir,
     )
 
-    recover_swap(store_path)
-    clean_orphan_stages(store_path, "sigstore_stage_")
-    store = spark.read.option("mergeSchema", "true").parquet(store_path)
-    if "__batch" not in store.columns:
-        store = store.withColumn("__batch", F.lit(-1))
-    else:
-        store = store.withColumn(
-            "__batch", F.coalesce(F.col("__batch"), F.lit(-1))
-        )
-    payload = [c for c in store.columns if c not in (id_col, "__batch")]
-    resolved = (
-        store.groupBy(id_col)
-        .agg(
-            F.max_by(F.struct(*payload), "__batch").alias("__s"),
-            F.max("__batch").alias("__batch"),
-        )
-        .select(
-            id_col, *[F.col(f"__s.{c}").alias(c) for c in payload], "__batch"
-        )
-    )
-    staged = stage_dir(store_path, prefix="sigstore_stage_")
-    resolved.write.mode("overwrite").parquet(staged)
-    # publish the compaction watermark WITH the output (r8 — closes the
-    # round-7 gap where the marker writer existed but was never
-    # called, leaving resolve_signature_store's merge-on-read fast
-    # path unreachable): the max resolved __batch is read back from
-    # the staged files (a footer-cheap scan of the already-written
-    # output — recomputing it from `resolved` would re-run the full
-    # store aggregation), written into the staged dir, and made
-    # visible atomically by the same rename that publishes the rows.
-    # An empty store has no watermark to claim — no marker, and reads
-    # keep the (trivial) full-resolve path.
-    wm = spark.read.parquet(staged).agg(F.max("__batch")).first()[0]
-    if wm is not None:
-        _write_compaction_marker(spark, staged, wm)
-    publish_swap(staged, store_path)
-    return spark.read.parquet(store_path).count()
+    with _stamp_lease(spark, store_path):
+        recover_swap(store_path)
+        clean_orphan_stages(store_path, "sigstore_stage_")
+        staged = stage_dir(store_path, prefix="sigstore_stage_")
+        _resolve_latest(_read_stamped(spark, store_path), id_col).write.mode(
+            "overwrite"
+        ).parquet(staged)
+        # publish the compaction watermark WITH the output (without it
+        # resolve_signature_store's merge-on-read fast path is
+        # unreachable): the max resolved __batch is read back from
+        # the staged files (a footer-cheap scan of the already-written
+        # output — recomputing it from the resolve would re-run the
+        # full store aggregation), written into the staged dir, and
+        # made visible atomically by the same rename that publishes the
+        # rows. An empty store has no watermark to claim — no marker,
+        # and reads keep the (trivial) full-resolve path.
+        wm = spark.read.parquet(staged).agg(F.max("__batch")).first()[0]
+        if wm is not None:
+            _write_compaction_marker(spark, staged, wm)
+        publish_swap(staged, store_path)
+        # floor later stamps above the watermark: rows stamped by a bare
+        # clock before the stamp sidecar existed can sit above the
+        # current time, and an append landing at or below the watermark
+        # would be read as compacted base, a second row for its id
+        if wm is not None and wm > _stamp_floor(spark, store_path):
+            _publish_stamp(spark, store_path, wm)
+        return spark.read.parquet(store_path).count()
 
 
 def store_stats(
@@ -1468,17 +1371,13 @@ def store_stats(
     watermark exists: it is a STATS op for cron decisions ("compact
     when dead_fraction > 0.3 or tail_rows > X"), not a read path.
     """
-    physical = spark.read.option("mergeSchema", "true").parquet(store_path)
+    physical = _read_stamped(spark, store_path)
     n_phys = physical.count()
     live = resolve_signature_store(spark, store_path, id_col).count()
     wm = compaction_watermark(spark, store_path)
     tail = None
     if wm is not None:
-        col = (
-            F.coalesce(F.col("__batch"), F.lit(-1))
-            if "__batch" in physical.columns else F.lit(-1)
-        )
-        tail = physical.where(col > wm).count()
+        tail = physical.where(F.col("__batch") > wm).count()
     return {
         "physical_rows": n_phys,
         "live_ids": live,

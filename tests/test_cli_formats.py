@@ -5,6 +5,7 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -15,6 +16,10 @@ import pytest
 pytestmark = pytest.mark.slow
 
 from etl_pack_spark.sources.formats import read_source
+
+# `python -m etl_pack_spark.cli` imports the package from its cwd: run
+# this checkout's CLI, wherever the checkout is
+REPO_ROOT = str(Path(__file__).resolve().parents[1])
 
 
 def test_cli_batch_transfer(sf_dir, tmp_path):
@@ -28,9 +33,9 @@ def test_cli_batch_transfer(sf_dir, tmp_path):
         "--increment",
     ]
     out1 = json.loads(subprocess.run(cmd, capture_output=True, text=True,
-                                     cwd="/root/repo", check=True).stdout.strip().splitlines()[-1])
+                                     cwd=REPO_ROOT, check=True).stdout.strip().splitlines()[-1])
     out2 = json.loads(subprocess.run(cmd, capture_output=True, text=True,
-                                     cwd="/root/repo", check=True).stdout.strip().splitlines()[-1])
+                                     cwd=REPO_ROOT, check=True).stdout.strip().splitlines()[-1])
     assert out1["rows"] > 0
     assert out2["rows"] == 0
 
@@ -40,7 +45,7 @@ def test_cli_bad_window_flag():
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--source-dir", "/x", "--table", "t", "--target", "/y",
          "--window", "not-a-window"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert res.returncode == 2
     assert "column:from:to" in res.stderr
@@ -125,13 +130,13 @@ def test_cli_compact_zorder(sf_dir, tmp_path):
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--source-dir", sf_dir, "--table", "events",
          "--target", src],
-        check=True, capture_output=True, text=True, cwd="/root/repo",
+        check=True, capture_output=True, text=True, cwd=REPO_ROOT,
     )
     out = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--compact", src, "--target", str(tmp_path / "z"),
          "--zorder-by", "user_id,value", "--target-file-mb", "0.01"],
-        check=True, capture_output=True, text=True, cwd="/root/repo",
+        check=True, capture_output=True, text=True, cwd=REPO_ROOT,
     )
     res = json.loads(out.stdout.strip().splitlines()[-1])
     assert res["mode"] == "compact" and res["out_files"] >= 1
@@ -143,7 +148,7 @@ def test_cli_transfer_still_requires_source(tmp_path):
 
     r = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli", "--target", str(tmp_path / "t")],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r.returncode == 2
     assert "source-dir" in r.stderr
@@ -159,7 +164,7 @@ def test_cli_compact_rejects_transfer_flags_fast(tmp_path):
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--compact", str(tmp_path), "--target", str(tmp_path / "o"),
          "--increment"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     took = time.perf_counter() - t0
     assert r.returncode == 2 and "--increment" in r.stderr
@@ -300,7 +305,7 @@ def test_cli_funnel_report(sf_dir):
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--funnel", f"{sf_dir}/documents.parquet",
          "--min-words", "10", "--min-lines", "1"],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     out = json.loads(res.stdout.strip().splitlines()[-1])
     assert out["mode"] == "funnel"
@@ -313,7 +318,7 @@ def test_cli_funnel_curate_gates(sf_dir):
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--funnel", f"{sf_dir}/documents.parquet",
          "--funnel-gates", "curate"],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     out = json.loads(res.stdout.strip().splitlines()[-1])
     assert out["gates"] == "curate"
@@ -333,7 +338,7 @@ def test_cli_funnel_curate_gates_reject_tuning_flags():
         res = subprocess.run(
             [sys.executable, "-m", "etl_pack_spark.cli",
              "--funnel", "/x", "--funnel-gates", "curate", *flags],
-            capture_output=True, text=True, cwd="/root/repo",
+            capture_output=True, text=True, cwd=REPO_ROOT,
         )
         assert res.returncode == 2, flags
         assert "do not apply to --funnel-gates curate" in res.stderr
@@ -343,7 +348,7 @@ def test_cli_funnel_is_exclusive_and_fast(tmp_path):
     res = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--funnel", "/x", "--store-stats", "/y"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert res.returncode == 2
     assert "exclusive" in res.stderr
@@ -356,7 +361,7 @@ def test_cli_drift_report(sf_dir, tmp_path):
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--drift", f"{sf_dir}/documents.parquet",
          "--drift-batch", f"{sf_dir}/documents.parquet"],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     out = json.loads(res.stdout.strip().splitlines()[-1])
     assert out["mode"] == "drift" and out["max_psi"] == 0.0
@@ -364,13 +369,13 @@ def test_cli_drift_report(sf_dir, tmp_path):
     # exclusivity + pairing validation (fast, pre-Spark)
     r2 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli", "--drift", "/x"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r2.returncode == 2 and "exactly one of" in r2.stderr
     r3 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--drift", "/x", "--drift-batch", "/y", "--funnel", "/z"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r3.returncode == 2 and "exclusive" in r3.stderr
 
@@ -387,7 +392,7 @@ def test_cli_report_history_store(spark, sf_dir, tmp_path):
     ):
         subprocess.run(
             [sys.executable, "-m", "etl_pack_spark.cli", *args],
-            capture_output=True, text=True, cwd="/root/repo", check=True,
+            capture_output=True, text=True, cwd=REPO_ROOT, check=True,
         )
     hist = spark.read.parquet(store)
     assert set(hist.columns) == {"fired_at_ms", "mode", "subject",
@@ -408,7 +413,7 @@ def test_cli_report_history_store(spark, sf_dir, tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--store-stats", "/x", "--report-out", store],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r.returncode == 2 and "--report-out" in r.stderr
 
@@ -422,14 +427,14 @@ def test_cli_drift_rejects_funnel_flags():
         r = subprocess.run(
             [sys.executable, "-m", "etl_pack_spark.cli",
              "--drift", "/x", "--drift-batch", "/y", *flags],
-            capture_output=True, text=True, cwd="/root/repo",
+            capture_output=True, text=True, cwd=REPO_ROOT,
         )
         assert r.returncode == 2, flags
         assert "do not apply to --drift" in r.stderr
     r = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--store-stats", "/x", "--funnel-gates", "c4"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r.returncode == 2 and "--funnel-gates" in r.stderr
 
@@ -448,7 +453,7 @@ def test_cli_drift_saved_baseline_roundtrip(spark, sf_dir, tmp_path):
     res = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--drift", docs, "--drift-save-baseline", hist],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     out = json.loads(res.stdout.strip().splitlines()[-1])
     assert out["mode"] == "drift_save_baseline" and out["buckets"] > 0
@@ -463,7 +468,7 @@ def test_cli_drift_saved_baseline_roundtrip(spark, sf_dir, tmp_path):
     res2 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--drift", hist, "--drift-batch", batch],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     out2 = json.loads(res2.stdout.strip().splitlines()[-1])
     # saved-vs-recomputed over the same corpus: identical histograms
@@ -474,7 +479,7 @@ def test_cli_drift_saved_baseline_roundtrip(spark, sf_dir, tmp_path):
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--drift", hist, "--drift-batch", batch,
          "--drift-save-baseline", str(tmp_path / "h2")],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r3.returncode == 2 and "exactly one of" in r3.stderr
 
@@ -494,14 +499,14 @@ def test_cli_drift_config_knobs(sf_dir, tmp_path):
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--drift", docs, "--drift-save-baseline", hist,
          "--drift-config", str(cfg)],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     # firing WITHOUT the flag reuses the stored config (only the two
     # configured signals appear)
     res = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--drift", hist, "--drift-batch", docs],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     out = json.loads(res.stdout.strip().splitlines()[-1])
     assert set(out["signals"]) == {"n_tokens", "lang_pred"}
@@ -513,7 +518,7 @@ def test_cli_drift_config_knobs(sf_dir, tmp_path):
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--drift", hist, "--drift-batch", docs,
          "--drift-config", str(cfg2)],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r2.returncode == 2 and "contradicts" in r2.stderr
     # validation failures are fast (no Spark) and name the problem
@@ -531,14 +536,14 @@ def test_cli_drift_config_knobs(sf_dir, tmp_path):
             [sys.executable, "-m", "etl_pack_spark.cli",
              "--drift", docs, "--drift-batch", docs,
              "--drift-config", str(bad)],
-            capture_output=True, text=True, cwd="/root/repo",
+            capture_output=True, text=True, cwd=REPO_ROOT,
         )
         assert r.returncode == 2 and msg in r.stderr, (payload, r.stderr)
     # scoped to --drift
     r3 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--funnel", docs, "--drift-config", str(cfg)],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r3.returncode == 2 and "only apply to --drift" in r3.stderr
 
@@ -561,12 +566,12 @@ def test_cli_report_trend(spark, sf_dir, tmp_path):
             [sys.executable, "-m", "etl_pack_spark.cli",
              "--drift", docs, "--drift-batch", batch,
              "--report-out", store],
-            capture_output=True, text=True, cwd="/root/repo", check=True,
+            capture_output=True, text=True, cwd=REPO_ROOT, check=True,
         )
     res = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--report-trend", store],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     out = json.loads(res.stdout.strip().splitlines()[-1])
     assert out["mode"] == "report_trend"
@@ -583,7 +588,7 @@ def test_cli_report_trend(spark, sf_dir, tmp_path):
     r2 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--report-trend", store, "--funnel", docs],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r2.returncode == 2 and "exclusive" in r2.stderr
 
@@ -598,40 +603,40 @@ def test_cli_register_eval(sf_dir, tmp_path):
            "--register-eval", docs, "--eval-store", store,
            "--eval-set", "bench_a"]
     out = json.loads(subprocess.run(
-        cmd, capture_output=True, text=True, cwd="/root/repo", check=True,
+        cmd, capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     ).stdout.strip().splitlines()[-1])
     assert out["mode"] == "register_eval" and out["appended"] > 0
     assert out["registered_sets"] == {"bench_a": out["appended"]}
     # retried firing appends nothing
     out2 = json.loads(subprocess.run(
-        cmd, capture_output=True, text=True, cwd="/root/repo", check=True,
+        cmd, capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     ).stdout.strip().splitlines()[-1])
     assert out2["appended"] == 0
     # a NEW set at another width in the same store: the supported
     # mixed-suite case since the per-set width upgrade (r13)
     out3 = json.loads(subprocess.run(
         [*cmd[:-1], "bench_b", "--eval-ngram", "5"],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     ).stdout.strip().splitlines()[-1])
     assert out3["appended"] > 0
     assert set(out3["registered_sets"]) == {"bench_a", "bench_b"}
     # contradicting an EXISTING set's width: loud exit-2, store untouched
     r = subprocess.run(
         [*cmd, "--eval-ngram", "5"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r.returncode == 2 and "8-gram" in r.stderr
     # flag scoping
     r2 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--eval-store", store],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r2.returncode == 2 and "--register-eval" in r2.stderr
     r3 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--register-eval", docs],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r3.returncode == 2 and "--eval-store" in r3.stderr
 
@@ -661,7 +666,7 @@ def test_cli_report_trend_funnel_shift(spark, sf_dir, tmp_path):
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--funnel", subject, "--funnel-gates", "curate",
          "--report-out", store],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     # firing 2: the real corpus at the same path (the cron shape: one
     # path, evolving data)
@@ -672,12 +677,12 @@ def test_cli_report_trend_funnel_shift(spark, sf_dir, tmp_path):
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--funnel", subject, "--funnel-gates", "curate",
          "--report-out", store],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     res = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--report-trend", store],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     out = json.loads(res.stdout.strip().splitlines()[-1])
     assert len(out["funnel_shift"]) == 1
@@ -693,7 +698,7 @@ def test_cli_datacard(sf_dir, tmp_path):
     docs = f"{sf_dir}/documents.parquet"
     res = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli", "--datacard", docs],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     out = json.loads(res.stdout.strip().splitlines()[-1])
     assert out["mode"] == "datacard" and out["groups"] == ["lang"]
@@ -706,7 +711,7 @@ def test_cli_datacard(sf_dir, tmp_path):
     res2 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli", "--datacard", docs,
          "--datacard-groups", "lang,source"],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     out2 = json.loads(res2.stdout.strip().splitlines()[-1])
     assert out2["groups"] == ["lang", "source"]
@@ -715,14 +720,14 @@ def test_cli_datacard(sf_dir, tmp_path):
     r3 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli", "--datacard", docs,
          "--datacard-groups", "nope"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r3.returncode == 2 and "nope" in r3.stderr
     # scoped flag
     r4 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--funnel", docs, "--datacard-groups", "lang"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r4.returncode == 2 and "--datacard" in r4.stderr
 
@@ -733,14 +738,14 @@ def test_cli_new_modes_missing_paths_fail_cleanly(tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--report-trend", str(tmp_path / "nope")],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r.returncode == 2 and "no report store" in r.stderr
     r2 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--register-eval", str(tmp_path / "nope2"),
          "--eval-store", str(tmp_path / "s"), "--eval-set", "b"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r2.returncode == 2 and "no eval docs" in r2.stderr
 
@@ -758,18 +763,18 @@ def test_cli_datacard_trend_roundtrip(spark, sf_dir, tmp_path):
     fire = [sys.executable, "-m", "etl_pack_spark.cli",
             "--datacard", subject, "--report-out", store]
     subprocess.run(fire, capture_output=True, text=True,
-                   cwd="/root/repo", check=True)
+                   cwd=REPO_ROOT, check=True)
     # second firing: one language slice dropped -> the token mix shifts
     langs = [r["lang"] for r in base.groupBy("lang").count()
              .orderBy("count", ascending=False).collect()]
     base.where(f"lang <> '{langs[0]}'").write.mode("overwrite") \
         .parquet(subject)
     subprocess.run(fire, capture_output=True, text=True,
-                   cwd="/root/repo", check=True)
+                   cwd=REPO_ROOT, check=True)
     res = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--report-trend", store],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     out = json.loads(res.stdout.strip().splitlines()[-1])
     metrics = {(m["mode"], m["metric"]): m for m in out["metrics"]}
@@ -790,14 +795,14 @@ def test_cli_datacard_group_edge_cases(sf_dir):
     r = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli", "--datacard", docs,
          "--datacard-groups", ","],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r.returncode == 2 and "no columns" in r.stderr
     # n_chars exists in the fixture AND is a text_signals output name
     r2 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli", "--datacard", docs,
          "--datacard-groups", "n_chars"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r2.returncode == 2 and "carry_cols" in r2.stderr
     assert "Traceback" not in r2.stderr
@@ -821,13 +826,13 @@ def test_cli_decontaminate_check(spark, sf_dir, tmp_path):
             [sys.executable, "-m", "etl_pack_spark.cli",
              "--register-eval", src, "--eval-store", store,
              "--eval-set", name],
-            capture_output=True, text=True, cwd="/root/repo", check=True,
+            capture_output=True, text=True, cwd=REPO_ROOT, check=True,
         )
     res = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--decontaminate-check", docs, "--eval-store", store,
          "--report-out", reports],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     out = json.loads(res.stdout.strip().splitlines()[-1])
     assert out["mode"] == "decontaminate_check"
@@ -843,14 +848,14 @@ def test_cli_decontaminate_check(spark, sf_dir, tmp_path):
     r2 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--decontaminate-check", docs],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r2.returncode == 2 and "--eval-store" in r2.stderr
     r3 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--decontaminate-check", docs, "--eval-store", store,
          "--eval-set", "x"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r3.returncode == 2 and "--register-eval" in r3.stderr
 
@@ -867,13 +872,13 @@ def test_cli_drift_histogram_missing_config_is_loud(sf_dir, tmp_path):
     subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli", "--drift", docs,
          "--drift-save-baseline", hist],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     os.remove(os.path.join(hist, "_drift_config.json"))
     r = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli", "--drift", hist,
          "--drift-batch", docs],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r.returncode == 2 and "_drift_config.json" in r.stderr
 
@@ -890,7 +895,7 @@ def test_cli_drift_stream(spark, sf_dir, tmp_path):
     subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli", "--drift", docs,
          "--drift-save-baseline", hist],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     spark.read.parquet(docs).select("doc_id", "text") \
         .coalesce(1).write.parquet(src)
@@ -898,7 +903,7 @@ def test_cli_drift_stream(spark, sf_dir, tmp_path):
         [sys.executable, "-m", "etl_pack_spark.cli", "--drift", hist,
          "--drift-stream", src, "--checkpoint", ckpt,
          "--report-out", reports],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     out = json.loads(res.stdout.strip().splitlines()[-1])
     assert out["mode"] == "drift_stream" and out["micro_batches"] >= 1
@@ -909,13 +914,13 @@ def test_cli_drift_stream(spark, sf_dir, tmp_path):
     r2 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli", "--drift", hist,
          "--drift-stream", src],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r2.returncode == 2 and "--checkpoint" in r2.stderr
     r3 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--drift-stream", src],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r3.returncode == 2 and "--drift" in r3.stderr
 
@@ -935,7 +940,7 @@ def test_cli_datacard_mix_keys_unambiguous(spark, tmp_path):
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--datacard", subject, "--datacard-groups", "lang,source",
          "--report-out", store],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     mix = spark.read.parquet(store).where("mode = 'datacard_mix'")
     keys = {r["metric"] for r in mix.select("metric").collect()}
@@ -968,14 +973,14 @@ def test_cli_datacard_langid_model(spark, tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli", "--datacard", subject,
          "--langid-model", model],
-        capture_output=True, text=True, cwd="/root/repo", check=True)
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True)
     out = json.loads(r.stdout.strip().splitlines()[-1])
     total = next(row for row in out["rows"] if row["is_total"] == 1)
     assert total["lang_match_frac"] == 1.0  # heuristic would miss 'it'
     r2 = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli", "--langid-model", model,
          "--funnel", subject],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True, cwd=REPO_ROOT)
     assert r2.returncode == 2 and "--langid-model" in r2.stderr
 
 
@@ -1006,7 +1011,7 @@ def test_cli_datacard_shift_bridges_legacy_mix_keys(spark, tmp_path):
     res = subprocess.run(
         [sys.executable, "-m", "etl_pack_spark.cli",
          "--report-trend", store],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
     )
     out = json.loads(res.stdout.strip().splitlines()[-1])
     shifts = out["datacard_shift"]

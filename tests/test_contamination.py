@@ -3,6 +3,8 @@ oracle parity check on the documents fixture."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import duckdb
 from pyspark.sql import functions as F
 
@@ -12,6 +14,10 @@ from etl_pack_spark.operators.contamination import (
     decontaminate,
 )
 from etl_pack_spark.sources.reader import read_table
+
+# `python -m etl_pack_spark.cli` imports the package from its cwd: run
+# this checkout's CLI, wherever the checkout is
+REPO_ROOT = str(Path(__file__).resolve().parents[1])
 
 
 def _df(spark, rows, schema="doc_id long, text string"):
@@ -596,7 +602,7 @@ class TestRegistryMaintenance:
         r = subprocess.run(
             [sys.executable, "-m", "etl_pack_spark.cli",
              "--compact", store, "--target", store, "--in-place"],
-            capture_output=True, text=True, cwd="/root/repo",
+            capture_output=True, text=True, cwd=REPO_ROOT,
         )
         assert r.returncode == 0, r.stderr
         import os

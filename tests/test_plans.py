@@ -252,3 +252,27 @@ def test_every_package_function_is_referenced():
             if total[node.name] == word.findall(own).count(node.name):
                 unreferenced.append(f"{path.relative_to(pkg)}:{node.name}")
     assert unreferenced == []
+
+
+def test_tests_pass_no_absolute_cwd():
+    """No test passes a literal absolute ``cwd=``: a CLI subprocess run
+    from one checkout with another checkout's path as its cwd imports
+    and tests the other checkout's package. Tests derive the repo root
+    from ``__file__`` instead."""
+    import ast
+    import os
+    import pathlib
+
+    tests = pathlib.Path(__file__).parent
+    found = []
+    for path in sorted(tests.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.keyword)
+                and node.arg == "cwd"
+                and isinstance(node.value, ast.Constant)
+                and isinstance(node.value.value, str)
+                and os.path.isabs(node.value.value)
+            ):
+                found.append(f"{path.name}:{node.value.lineno}")
+    assert found == []

@@ -3,12 +3,17 @@ and scale-shape checks over the documents fixture."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from etl_pack_spark.plans.pretrain import prepare_pretraining_corpus
 from etl_pack_spark.sources.reader import read_table
 
 WEIGHTS = {"src1": 0.5, "src2": 0.3, "src3": 0.2}
+# `python -m etl_pack_spark.cli` imports the package from its cwd: run
+# this checkout's CLI, wherever the checkout is
+REPO_ROOT = str(Path(__file__).resolve().parents[1])
 
 
 def _docs(spark, sf_dir):
@@ -315,7 +320,7 @@ def test_pretrain_funnel_cli(sf_dir):
         [_sys.executable, "-m", "etl_pack_spark.cli",
          "--funnel", f"{sf_dir}/documents.parquet",
          "--funnel-gates", "pretrain"],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO_ROOT, check=True,
         timeout=600,
     )
     out = _json.loads(res.stdout.strip().splitlines()[-1])
@@ -327,7 +332,7 @@ def test_pretrain_funnel_cli(sf_dir):
         [_sys.executable, "-m", "etl_pack_spark.cli",
          "--funnel", f"{sf_dir}/documents.parquet",
          "--funnel-gates", "pretrain", "--min-words", "9"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
         timeout=600,
     )
     assert res2.returncode == 2

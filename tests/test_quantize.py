@@ -431,6 +431,7 @@ def test_ivf_pq_compact_shrinks_store_same_answers(spark, sf_dir, tmp_path):
     (crash-safe swap) — physical rows shrink to live ids, query answers
     are identical, and a later append still works."""
     import glob
+    import os
 
     from etl_pack_spark.operators.quantize import (
         ivf_pq_append,
@@ -468,11 +469,138 @@ def test_ivf_pq_compact_shrinks_store_same_answers(spark, sf_dir, tmp_path):
     assert n == emb.count()
     assert spark.read.parquet(f"{path}/codes").count() == emb.count()
     assert rows() == before
-    # no leftover stage/backup dirs
-    assert not glob.glob(f"{path}/.codes*")
+    # no leftover hidden stage/backup dirs (compaction stages are
+    # .sigstore_stage_codes_*, its backup .codes.bak)
+    assert not [d for d in glob.glob(f"{path}/.*") if os.path.isdir(d)]
     # the compacted store still accepts appends (batch ids preserved)
     ivf_pq_append(spark, path, half_b)
     assert rows() == before
+
+
+@pytest.fixture(scope="module")
+def half_index(spark, emb):
+    """An IVF-PQ index built on the even ``vec_id`` half of the corpus,
+    shared by the codes-store lifecycle tests (each saves its own copy)."""
+    from etl_pack_spark.operators.quantize import ivf_pq_index
+
+    dims = len(emb.select("embedding").first()[0])
+    return ivf_pq_index(emb.where("vec_id % 2 = 0"), dims, nlist=8, m=8, k=16)
+
+
+def _codes_files(path):
+    import glob
+
+    return sorted(glob.glob(f"{path}/codes/*.parquet"))
+
+
+def _codes_of(spark, path):
+    from etl_pack_spark.operators.quantize import ivf_pq_load
+
+    _, _, _, enc = ivf_pq_load(spark, path)
+    return {r["id"]: (r["cid"], tuple(r["codes"])) for r in enc.collect()}
+
+
+def _relabelled(emb, src_id, new_id):
+    """Row ``src_id``'s vector under id ``new_id`` — an update of
+    ``new_id`` whose expected codes are ``src_id``'s build-time codes."""
+    return emb.where(F.col("vec_id") == src_id).withColumn(
+        "vec_id", F.lit(new_id).cast("long")
+    )
+
+
+def test_ivf_pq_compact_takes_codes_lease(spark, emb, half_index, tmp_path):
+    """Compaction holds the codes store's lease: while another writer
+    holds it, ``ivf_pq_compact`` raises and the store's parquet files
+    are untouched (an append landing between compaction's read and its
+    swap would go to the backup dir the swap deletes)."""
+    from etl_pack_spark.operators.quantize import (
+        ivf_pq_append,
+        ivf_pq_compact,
+        ivf_pq_save,
+    )
+    from etl_pack_spark.streaming.incremental import _stamp_lease
+
+    cids, C, books, enc_a = half_index
+    path = str(tmp_path / "idx")
+    ivf_pq_save(path, cids, C, books, enc_a)
+    ivf_pq_append(spark, path, emb.where("vec_id % 2 = 1"))
+    before = _codes_files(path)
+    with _stamp_lease(spark, f"{path}/codes"):
+        with pytest.raises(RuntimeError, match="ingest lease"):
+            ivf_pq_compact(spark, path)
+        assert _codes_files(path) == before
+    assert ivf_pq_compact(spark, path) == emb.count()  # released
+
+
+def test_ivf_pq_append_takes_codes_lease(spark, emb, half_index, tmp_path):
+    """An append holds the codes store's lease, like every stamped-store
+    writer: a second writer raises instead of racing the stamp sidecar."""
+    from etl_pack_spark.operators.quantize import ivf_pq_append, ivf_pq_save
+    from etl_pack_spark.streaming.incremental import _stamp_lease
+
+    cids, C, books, enc_a = half_index
+    path = str(tmp_path / "idx")
+    ivf_pq_save(path, cids, C, books, enc_a)
+    before = _codes_files(path)
+    with _stamp_lease(spark, f"{path}/codes"):
+        with pytest.raises(RuntimeError, match="ingest lease"):
+            ivf_pq_append(spark, path, _relabelled(emb, 0, 1))
+    assert _codes_files(path) == before
+
+
+def test_ivf_pq_append_stamps_survive_clock_step_back(
+    spark, emb, half_index, tmp_path, monkeypatch
+):
+    """An update appended after the clock stepped back still wins:
+    stamps come from the store's monotone stamper, not the raw clock."""
+    import time
+
+    from etl_pack_spark.operators.quantize import ivf_pq_append, ivf_pq_save
+
+    cids, C, books, enc_a = half_index
+    path = str(tmp_path / "idx")
+    ivf_pq_save(path, cids, C, books, enc_a)
+    built = _codes_of(spark, path)
+    ivf_pq_append(spark, path, emb.where(F.col("vec_id") == 1))
+    first = _codes_of(spark, path)[1]
+    # an even id whose build-time codes differ from id 1's
+    src = next(i for i in sorted(built) if built[i] != first)
+    real = time.time
+    monkeypatch.setattr(time, "time", lambda: real() - 3600)
+    ivf_pq_append(spark, path, _relabelled(emb, src, 1))
+    assert _codes_of(spark, path)[1] == built[src]
+
+
+def test_ivf_pq_compaction_floors_later_stamps(
+    spark, emb, half_index, tmp_path
+):
+    """Rows a bare clock stamped AHEAD of today (no stamp sidecar, as
+    appends made before the monotone stamper left them) set the
+    compaction watermark; an append after the compaction must still
+    land above it and win, not read as a second base row for its id."""
+    import time
+
+    from etl_pack_spark.operators.quantize import (
+        ivf_pq_append,
+        ivf_pq_compact,
+        ivf_pq_load,
+        ivf_pq_save,
+    )
+
+    cids, C, books, enc_a = half_index
+    path = str(tmp_path / "idx")
+    ivf_pq_save(path, cids, C, books, enc_a)
+    built = _codes_of(spark, path)
+    future = int(time.time() * 1000) + 24 * 3_600_000
+    enc_a.where("id = 0").withColumn("id", F.lit(1).cast("long")).withColumn(
+        "__batch", F.lit(future).cast("long")
+    ).write.mode("append").parquet(f"{path}/codes")
+    ivf_pq_compact(spark, path)
+    src = next(i for i in sorted(built) if built[i] != built[0])
+    ivf_pq_append(spark, path, _relabelled(emb, src, 1))
+    _, _, _, enc = ivf_pq_load(spark, path)
+    rows = enc.where("id = 1").collect()
+    assert [(r["cid"], tuple(r["codes"])) for r in rows] == [built[src]]
 
 
 def test_ivf_pq_save_is_staged_and_manifested(spark, sf_dir, tmp_path):

@@ -5,11 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-# r16 two-tier suite (round-15 VERDICT #1): multi-minute streaming drains (micro-batch waits dominate).
-# Deselected by the default `-m "not slow"` profile (pytest.ini)
-# so the driver's verify completes in budget; the full gate
-# (`pytest tests/ -m ""`) still runs this module.
-pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from etl_pack_spark.sources.reader import read_table
@@ -19,7 +14,14 @@ from etl_pack_spark.streaming.incremental import (
     windowed_event_counts,
 )
 
+# Two-tier suite: tests that drain a stream (micro-batch waits dominate,
+# multi-minute in total) are marked `slow` one by one and deselected by
+# the default `-m "not slow"` profile (pytest.ini); the full gate
+# (`pytest tests/ -m ""`) runs them. Unmarked tests drain no stream
+# and take a few seconds each, so the lease protocol stays in the fast tier.
 
+
+@pytest.mark.slow
 def test_stream_matches_batch_below_watermark(spark, sf_dir, tmp_path):
     """Streamed windowed counts must equal the batch computation for
     every window the watermark has closed."""
@@ -43,6 +45,7 @@ def test_stream_matches_batch_below_watermark(spark, sf_dir, tmp_path):
     assert streamed_set <= {tuple(r) for r in batch.collect()}
 
 
+@pytest.mark.slow
 def test_availablenow_checkpoint_no_reprocess(spark, sf_dir, tmp_path):
     """Second availableNow run over the same files: checkpoint says
     nothing new → no new output rows (the cron-firing idempotence the
@@ -56,6 +59,7 @@ def test_availablenow_checkpoint_no_reprocess(spark, sf_dir, tmp_path):
     assert n1 == n2
 
 
+@pytest.mark.slow
 def test_foreachbatch_incremental_dedup(spark, sf_dir, tmp_path):
     """Streaming variant of the flagship pipeline: re-running against a
     FRESH checkpoint (simulating redelivery of all files) must append
@@ -70,6 +74,7 @@ def test_foreachbatch_incremental_dedup(spark, sf_dir, tmp_path):
     assert spark.read.parquet(tgt).count() == n1
 
 
+@pytest.mark.slow
 def test_dedup_stream_drops_replayed_rows(spark, sf_dir, tmp_path):
     """An at-least-once source replays the same file: the watermarked
     streaming dedup must emit each event once."""
@@ -106,6 +111,7 @@ def test_dedup_stream_batch_mode(spark, sf_dir):
     assert dedup_stream(doubled, ["event_id"]).count() == events.count()
 
 
+@pytest.mark.slow
 def test_stateful_idle_timeout_evicts_state(spark, tmp_path):
     """A key idle past the timeout is evicted: its next appearance
     restarts from zero instead of continuing the old total. Three
@@ -157,6 +163,7 @@ def test_stateful_idle_timeout_evicts_state(spark, tmp_path):
     assert {r["n_events"] for r in rows} == {1}, rows
 
 
+@pytest.mark.slow
 def test_stateless_operators_run_under_readstream(spark, sf_dir, tmp_path):
     """Map-only operators (text_signals, c4_clean) are streaming-ready
     with NO changes: the same DataFrame transform applied to a
@@ -196,6 +203,7 @@ def test_stateless_operators_run_under_readstream(spark, sf_dir, tmp_path):
     assert streamed == batch and len(streamed) > 0
 
 
+@pytest.mark.slow
 def test_stream_cdc_apply_replay_equals_batch(spark, tmp_path):
     """Streaming CDC (availableNow + checkpoint): two incremental
     firings == one batch apply_cdc; replaying ALL files from a fresh
@@ -260,6 +268,7 @@ def test_stream_cdc_apply_replay_equals_batch(spark, tmp_path):
     assert again == want
 
 
+@pytest.mark.slow
 def test_stream_cdc_apply_recovers_interrupted_swap(spark, tmp_path):
     """A firing killed between the backup-move and the staged-move
     leaves target missing + the hidden backup present; the next firing must
@@ -293,6 +302,7 @@ def test_stream_cdc_apply_recovers_interrupted_swap(spark, tmp_path):
     assert not os.path.exists(backup_path(tgt))
 
 
+@pytest.mark.slow
 class TestStreamNeardupIngest:
     def _write_half(self, spark, sf_dir, src, pred):
         from pyspark.sql import functions as F
@@ -361,6 +371,7 @@ class TestStreamNeardupIngest:
         assert spark.read.parquet(store).count() == n_store
 
 
+@pytest.mark.slow
 class TestNeardupIngestUpdates:
     def test_updated_doc_signature_replaces_old_deterministically(
         self, spark, tmp_path
@@ -421,6 +432,7 @@ class TestNeardupIngestUpdates:
         assert tuple(latest) == tuple(sig_b[c] for c in cols)
 
 
+@pytest.mark.slow
 def test_neardup_store_without_batch_column_migrates(spark, tmp_path):
     """Stores written before the batch stamp existed (no __batch
     column) must keep working: they read as batch -1 and any stamped
@@ -450,6 +462,7 @@ def test_neardup_store_without_batch_column_migrates(spark, tmp_path):
     assert frozenset((1, 2)) in pairs
 
 
+@pytest.mark.slow
 def test_neardup_store_mixed_legacy_and_stamped_files(spark, tmp_path):
     """After the FIRST stamped append to a legacy store the directory
     MIXES files without __batch and files with it. The store read must
@@ -520,6 +533,7 @@ def test_recover_swap_honors_legacy_backup_name(tmp_path):
     assert os.path.exists(os.path.join(tgt, "part-0.parquet"))
 
 
+@pytest.mark.slow
 class TestStreamUrlDedupIngest:
     """Crawl-frontier URL dedup on ingest: the canonical-URL store is
     the only retained state; admitted rows never rescan."""
@@ -591,6 +605,7 @@ class TestStreamUrlDedupIngest:
         assert spark.read.parquet(store).count() == n_store
 
 
+@pytest.mark.slow
 def test_compact_signature_store_preserves_matching(spark, tmp_path):
     """Compaction resolves the append-only store to one latest row per
     id (migrating legacy unstamped files too) and must change NO
@@ -702,6 +717,7 @@ def test_compactor_publishes_watermark_and_resolve_agrees(spark, tmp_path):
     assert resolved() == [(1, 99), (2, 77), (3, 33)]
 
 
+@pytest.mark.slow
 def test_post_compaction_ingest_lands_above_watermark(spark, tmp_path):
     """r8: append stamps are epoch millis, so a FRESH checkpoint's
     micro-batches (ids restarting at 0) still land ABOVE any prior
@@ -752,6 +768,7 @@ def test_post_compaction_ingest_lands_above_watermark(spark, tmp_path):
     assert tuple(got) == tuple(want)  # the post-compaction rewrite won
 
 
+@pytest.mark.slow
 def test_update_cluster_store_incremental_fold(spark, tmp_path):
     """r8 incremental clusters maintenance, end-to-end with the ingest:
     two near-dup ingest firings append stamped matches; each
@@ -822,6 +839,7 @@ def test_update_cluster_store_incremental_fold(spark, tmp_path):
                  "--compact-sigstore", store]) == 2
 
 
+@pytest.mark.slow
 def test_store_stats_reports_maintenance_signals(spark, tmp_path):
     """r9 store introspection: physical vs live rows, watermark/tail,
     monotone-stamp sidecar, dead fraction — before and after
@@ -870,6 +888,7 @@ class TestIngestLease:
     — previously an implicit docstring assumption, now an enforced
     lease (an exclusive sidecar file held for the firing's duration)."""
 
+    @pytest.mark.slow
     def test_concurrent_firing_is_rejected_while_lease_held(
         self, spark, tmp_path
     ):
@@ -966,6 +985,7 @@ class TestIngestLease:
         assert fsio.exists(spark, lease)
         assert json.loads(fsio.read_text(spark, lease))["token"] == "other"
 
+    @pytest.mark.slow
     def test_lease_released_on_firing_failure(self, spark, tmp_path):
         """The lease is released even when the firing fails INSIDE the
         leased section — a crashed firing must not require manual
@@ -1058,6 +1078,7 @@ class TestStreamQualityDrift:
                                    dict(DRIFT_CATEGORIES)),
         )
 
+    @pytest.mark.slow
     def test_stable_then_shifted_slices(self, spark, sf_dir, tmp_path):
         from pyspark.sql import functions as F
 
@@ -1121,6 +1142,7 @@ class TestStreamQualityDrift:
                 spark, src, hist, str(tmp_path / "c2"),
                 str(tmp_path / "r2"))
 
+    @pytest.mark.slow
     def test_deploy_before_first_slice(self, spark, sf_dir, tmp_path):
         """r14: a resident monitor deployed before the day's crawl
         arrives must not crash — empty/missing source = 0 batches;
@@ -1148,6 +1170,7 @@ class TestStreamQualityDrift:
         assert rep.count() > 0
         assert {r["verdict"] for r in rep.collect()} == {"stable"}
 
+    @pytest.mark.slow
     def test_explicit_schema_and_batch_count(self, spark, sf_dir, tmp_path):
         """r14: schema= pins the slice schema without inferring from the
         first file, and the return counts batches from the callback
@@ -1173,6 +1196,7 @@ class TestStreamQualityDrift:
         assert n >= 1
 
 
+@pytest.mark.slow
 def test_batch_count_uncapped_past_recent_progress_limit(spark, tmp_path):
     """round-14 VERDICT #2: a backlog larger than
     spark.sql.streaming.numRecentProgressUpdates (default 100) drained in
@@ -1214,6 +1238,7 @@ def test_batch_count_uncapped_past_recent_progress_limit(spark, tmp_path):
     assert n2 <= 1  # at most the empty finalization batch
 
 
+@pytest.mark.slow
 class TestMediaDedupIngest:
     """r15: image near-dup-on-ingest — the multimodal member of the
     resident-dedup family (dHash store + incremental hamming match)."""
