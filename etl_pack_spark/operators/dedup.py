@@ -32,8 +32,12 @@ def snapshot_hashes(target: DataFrame, cols: list[str] | None = None) -> DataFra
     """H2: distinct canonical hashes of the target (consumer.go:88-95),
     kept distributed — one column ``h``, deduplicated map-side first
     (partial aggregate) before the exchange."""
-    cols = cols or target.columns
-    return target.select(row_hash(cols, target).alias("h")).distinct()
+    return _target_hashes(target, cols).distinct()
+
+
+def _target_hashes(target: DataFrame, cols: list[str] | None) -> DataFrame:
+    """One column ``h``: the canonical hash of every target row."""
+    return target.select(row_hash(cols or target.columns, target).alias("h"))
 
 
 _BUCKET_COL = "__h_bkt"
@@ -141,8 +145,15 @@ def incremental_load(
     cols: list[str] | None = None,
 ) -> DataFrame:
     """The reference's whole raison d'être as one plan (SURVEY §3.4):
-    new rows = src ANTI JOIN hashes(target)."""
-    snap = snapshot_hashes(target, cols) if target is not None else None
+    new rows = src ANTI JOIN hashes(target).
+
+    The anti-join reads the target's plain hash projection, not the
+    distinct :func:`snapshot_hashes`: a left-anti join only tests
+    membership, so duplicates on its build side change no result, and
+    skipping the ``distinct`` saves a shuffle stage and an adaptive
+    re-plan before the broadcast. ``cols`` hashes both sides (default:
+    each side's own columns)."""
+    snap = _target_hashes(target, cols) if target is not None else None
     return incremental_filter(src, snap, cols)
 
 

@@ -15,8 +15,13 @@ Golden vectors (etl_test.go:25,34,43):
     ["5","7","6","8"]    → 674f3c2c1a8a6f90461e8a66fb5550ba
     ["9","10","11","12"] → dfd9bfe9dab8fc185ea63bfdc614f9e7
 
-This is a pure Catalyst expression — whole-stage-codegen'd, no Python
-in the hot path — so hashing 100 TB costs one projection over the scan.
+This is a pure Catalyst expression, parsed from one SQL string in a
+single driver call. Every function in it (``lower``, ``cast``,
+``coalesce``, ``date_format``, ``array``, ``sort_array``, ``concat_ws``,
+``md5``) is whole-stage-codegen'd; ``sort_array`` compares the cell
+strings bytewise like step 3 asks, where ``array_sort``'s default
+lambda comparator would be interpreted. No Python runs in the hot path,
+so hashing 100 TB costs one projection over the scan.
 
 Cross-engine fidelity: the same five steps are emitted as ANSI SQL for
 the DuckDB oracle (:func:`row_hash_sql`). Both engines render ints and
@@ -36,24 +41,27 @@ TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 
-def _cell(df: DataFrame | None, name: str) -> Column:
-    """Canonical string rendering of one cell (step 1)."""
-    col = F.col(name)
-    if df is not None:
-        dtype = dict((f.name, f.dataType) for f in df.schema.fields).get(name)
-        if isinstance(dtype, T.TimestampType):
-            col = F.date_format(col, TS_FMT_SPARK)
-    return F.coalesce(col.cast("string"), F.lit(""))
+def _cell_sql(name: str, dtype: T.DataType | None) -> str:
+    """Canonical lowercase string rendering of one cell (steps 1-2).
+    The name is backtick-quoted, so dots, spaces and backticks in it
+    stay part of the name."""
+    col = "`" + name.replace("`", "``") + "`"
+    if isinstance(dtype, T.TimestampType):
+        col = f"date_format({col}, '{TS_FMT_SPARK}')"
+    return f"lower(coalesce(cast({col} as string), ''))"
 
 
 def row_hash(cols: list[str], df: DataFrame | None = None) -> Column:
-    """H1 as a single Catalyst expression (etl.go:59-68).
+    """H1 as a single Catalyst expression (etl.go:59-68), built as one
+    SQL string and parsed in one call.
 
     Pass ``df`` so timestamp columns get the explicit cross-engine
-    rendering; plain string/numeric columns need no schema.
+    rendering; plain string/numeric columns need no schema. Column
+    names are matched literally, dotted and spaced ones included.
     """
-    cells = [F.lower(_cell(df, c)) for c in cols]
-    return F.md5(F.concat_ws("", F.array_sort(F.array(*cells))))
+    types = {f.name: f.dataType for f in df.schema.fields} if df is not None else {}
+    cells = ", ".join(_cell_sql(c, types.get(c)) for c in cols)
+    return F.expr(f"md5(concat_ws('', sort_array(array({cells}))))")
 
 
 def with_row_hash(df: DataFrame, cols: list[str] | None = None, out: str = "row_h") -> DataFrame:

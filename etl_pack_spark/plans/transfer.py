@@ -6,9 +6,12 @@ consumer.go:26-75). All of that is scheduling, which Spark owns; the
 *pipeline* collapses to a four-line plan (SURVEY §3.4):
 
     src  = windowed_read(source, fields, window)        # S1-S3, P1-P3
-    snap = snapshot_hashes(read(target))                # H2
-    new  = incremental_filter(src, snap)                # H1+H3
+    new  = incremental_load(src, open_parquet(target))  # H1+H3
     append_table(new, target)                           # S4/S5, X4
+
+Both opens read their schema from the parquet footers, so a warm
+firing runs two Spark jobs: the broadcast of the target's hashes and
+the write (one, the write, while the target does not exist yet).
 
 Cron (X1, provider.go:69-87) becomes an external scheduler invoking
 :func:`run_transfer` — each invocation is one "firing". A resident
@@ -21,9 +24,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-from etl_pack_spark.operators.dedup import incremental_filter, snapshot_hashes
+from etl_pack_spark.operators.dedup import incremental_load
 from etl_pack_spark.sinks.writers import WriteResult, append_table
-from etl_pack_spark.sources.reader import ReadSpec, read_table, windowed_read
+from etl_pack_spark.sources.reader import ReadSpec, open_parquet, windowed_read
 
 
 @dataclass(frozen=True)
@@ -55,16 +58,15 @@ def run_transfer(spark: SparkSession, cfg: TransferConfig) -> WriteResult:
     spec = ReadSpec(table=cfg.table, fields=cfg.fields, window=cfg.window, order=cfg.order)
     src = windowed_read(spark, cfg.source_dir, spec)
 
-    snapshot = None
+    tgt = None
     if cfg.increment and _target_exists(spark, cfg.target_path):
-        tgt = spark.read.parquet(cfg.target_path)
+        tgt = open_parquet(spark, cfg.target_path)
         if cfg.window is not None and cfg.window[0] in tgt.columns:
             tgt = windowed_read(spark, "", ReadSpec(table="", window=cfg.window), df=tgt)
         if cfg.fields:
             tgt = tgt.select(*cfg.fields)
-        snapshot = snapshot_hashes(tgt)
 
-    new_rows = incremental_filter(src, snapshot, cols=src.columns)
+    new_rows = incremental_load(src, tgt)
     return append_table(new_rows, cfg.target_path, partition_by=cfg.partition_by or None)
 
 

@@ -19,11 +19,14 @@ partitions before any I/O happens.
 
 from __future__ import annotations
 
+import json
 import os
+import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 @dataclass(frozen=True)
@@ -121,12 +124,133 @@ def _ship_package(spark: SparkSession) -> None:
     spark.conf.set("spark.etl_pack_spark.shipped", "1")
 
 
+# Spark writes its own schema JSON into every parquet footer under this
+# key; schema inference reads it back verbatim when present.
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable (Spark's
+    ``asNullable``, which every file relation applies)."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _infers_differently(at) -> bool:
+    """Whether parquet inference gives Arrow type ``at``, or a type nested
+    in it, another Spark type than ``from_arrow_type`` does: nanosecond
+    timestamps and durations (longs), times (which Spark rejects) and
+    nulls (ints)."""
+    import pyarrow.types as pat
+
+    if pat.is_dictionary(at):
+        return _infers_differently(at.value_type)
+    if pat.is_timestamp(at):
+        return at.unit == "ns"
+    if pat.is_duration(at) or pat.is_time(at) or pat.is_null(at):
+        return True
+    return any(_infers_differently(at.field(i).type) for i in range(at.num_fields))
+
+
+def footer_schema(file: str, ntz: bool = True) -> T.StructType | None:
+    """The schema Spark infers for a parquet path whose first data file
+    (in path order) is ``file``, read from that file's footer on the
+    driver, or ``None`` when a type's inference differs from the Arrow
+    mapping or has no Spark type (unsigned ints, float16). With
+    ``mergeSchema`` off Spark reads that one footer too.
+
+    A Spark-written file carries Spark's own schema JSON, which inference
+    uses verbatim; another file maps its Arrow schema, naive timestamps to
+    TIMESTAMP_NTZ when ``ntz`` (``spark.sql.parquet.inferTimestampNTZ.enabled``).
+    No JVM is needed."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    schema = pq.read_schema(file)
+    js = (schema.metadata or {}).get(SPARK_ROW_METADATA)
+    if js is not None:
+        return _nullable(T.StructType.fromJson(json.loads(js)))
+    if any(_infers_differently(f.type) for f in schema):
+        return None
+    try:
+        return _nullable(from_arrow_schema(schema, prefer_timestamp_ntz=ntz))
+    except TypeError:  # PySparkTypeError: an Arrow type with no Spark type
+        return None
+
+
+_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
+
+
+def _local_parquet_files(spark: SparkSession, path: str) -> list[str] | None:
+    """The data files Spark's listing would read under ``path`` when it
+    is a local file or a flat local directory, else ``None``: another
+    filesystem, a relative path, a glob, partition or other
+    subdirectories, or summary files (which Spark would read the schema
+    from)."""
+    if path.startswith("file:"):
+        path = "/" + path[len("file:"):].lstrip("/")
+    elif _SCHEME.match(path):
+        return None
+    else:
+        default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+        if not default_fs.startswith("file:"):
+            return None
+    # relative paths resolve against the JVM's start directory, which a
+    # later chdir in Python does not move
+    if not os.path.isabs(path) or any(ch in path for ch in "*?[{"):
+        return None
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        return None
+    files = []
+    for entry in os.scandir(path):
+        name = entry.name
+        if name.startswith(("_metadata", "_common_metadata")):
+            return None
+        if (name.startswith(".") or (name.startswith("_") and "=" not in name)
+                or name.endswith("._COPYING_")):
+            continue  # Spark's hidden-path filter
+        if not entry.is_file():
+            return None
+        files.append(entry.path)
+    return sorted(files)
+
+
+def open_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the same schema and no Spark
+    job: the schema comes from the first data file's footer
+    (:func:`footer_schema`), the one file Spark's own inference reads,
+    and is passed with ``.schema(...)``. Any path the footer read cannot
+    vouch for (not local and absolute, partitioned, empty, an uncovered
+    type, ``mergeSchema`` on) takes the plain inferred read."""
+    schema = None
+    try:
+        merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true"
+        files = None if merge else _local_parquet_files(spark, path)
+        if files:
+            ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+            schema = footer_schema(files[0], ntz=ntz.lower() == "true")
+    except Exception:  # noqa: BLE001 — any footer hiccup: Spark infers
+        schema = None
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
 def read_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """S1/S2 equivalent over the repo's parquet fixtures. A JDBC source
     plugs in via :func:`etl_pack_spark.sources.jdbc.jdbc_read` with the
     same downstream plan."""
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    df = open_parquet(spark, f"{sf_dir}/{table}.parquet")
     for c in NANOS_TS_TABLES.get(table, []):
         field = dict((f.name, f.dataType) for f in df.schema.fields).get(c)
         if field is None:

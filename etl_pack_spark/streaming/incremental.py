@@ -19,11 +19,12 @@ from __future__ import annotations
 
 from contextlib import contextmanager as _contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pack_spark.operators.dedup import incremental_filter, snapshot_hashes
+from etl_pack_spark.operators.dedup import incremental_load
 from etl_pack_spark.plans.merge import apply_cdc
+from etl_pack_spark.sources.reader import open_parquet
 
 # a crashed ingest-lease holder blocks its store for at most this long
 # (see _stamp_lease); must exceed the longest legitimate firing
@@ -203,13 +204,12 @@ def stream_incremental_transfer(
     from etl_pack_spark.sinks.fsio import exists as fs_exists
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        snap = None
+        target = None
         # scheme-aware (r9): a missed probe on an object-store target
         # would skip the snapshot anti-join and re-append every batch
         if fs_exists(batch_df.sparkSession, target_path):
-            snap = snapshot_hashes(batch_df.sparkSession.read.parquet(target_path))
-        new_rows = incremental_filter(batch_df, snap)
-        new_rows.write.mode("append").parquet(target_path)
+            target = open_parquet(batch_df.sparkSession, target_path)
+        incremental_load(batch_df, target).write.mode("append").parquet(target_path)
 
     return _fire(_events_stream(spark, source_dir), checkpoint, upsert)
 
@@ -1323,19 +1323,19 @@ def compact_signature_store(
         recover_swap(store_path)
         clean_orphan_stages(store_path, "sigstore_stage_")
         staged = stage_dir(store_path, prefix="sigstore_stage_")
-        _resolve_latest(_read_stamped(spark, store_path), id_col).write.mode(
-            "overwrite"
-        ).parquet(staged)
-        # publish the compaction watermark WITH the output (without it
+        # the row count and the compaction watermark (the max resolved
+        # __batch) ride the write job, as append_table's count does
+        obs = Observation("compact")
+        _resolve_latest(_read_stamped(spark, store_path), id_col).observe(
+            obs, F.count(F.lit(1)).alias("rows"), F.max("__batch").alias("wm")
+        ).write.mode("overwrite").parquet(staged)
+        # publish the watermark WITH the output (without it
         # resolve_signature_store's merge-on-read fast path is
-        # unreachable): the max resolved __batch is read back from
-        # the staged files (a footer-cheap scan of the already-written
-        # output — recomputing it from the resolve would re-run the
-        # full store aggregation), written into the staged dir, and
-        # made visible atomically by the same rename that publishes the
-        # rows. An empty store has no watermark to claim — no marker,
-        # and reads keep the (trivial) full-resolve path.
-        wm = spark.read.parquet(staged).agg(F.max("__batch")).first()[0]
+        # unreachable): written into the staged dir and made visible
+        # atomically by the same rename that publishes the rows. An
+        # empty store has no watermark to claim — no marker, and reads
+        # keep the (trivial) full-resolve path.
+        wm = obs.get["wm"]
         if wm is not None:
             _write_compaction_marker(spark, staged, wm)
         publish_swap(staged, store_path)
@@ -1345,7 +1345,7 @@ def compact_signature_store(
         # would be read as compacted base, a second row for its id
         if wm is not None and wm > _stamp_floor(spark, store_path):
             _publish_stamp(spark, store_path, wm)
-        return spark.read.parquet(store_path).count()
+        return int(obs.get["rows"])
 
 
 def store_stats(

@@ -58,6 +58,7 @@ from etl_pack_spark.plans.merge import scd2_build_sql, snapshot_diff_sql
 from etl_pack_spark.operators.dedup import (
     exact_dedup,
     incremental_filter,
+    incremental_load,
     snapshot_hashes,
 )
 from etl_pack_spark.operators.hashing import row_hash_sql, with_row_hash
@@ -229,7 +230,7 @@ def q_x4_incremental_load(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = spread_small_scan(windowed_read(spark, sf_dir, spec), "l_orderkey")
     tgt = src.where(F.col("l_orderkey") % 4 != 3)
-    return incremental_filter(src, snapshot_hashes(tgt), src.columns)
+    return incremental_load(src, tgt, src.columns)
 
 
 # ---------------------------------------------------------------------------

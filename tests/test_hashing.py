@@ -39,6 +39,22 @@ def test_column_order_insensitive(spark):
     assert h1 == h2
 
 
+def test_dotted_quoted_and_spaced_names(spark):
+    """Column names are matched literally: a top-level ``a.b`` is not a
+    struct path, and backticks and spaces stay part of the name (the
+    shape ClickHouse ``Nested`` columns flatten into). The hash ignores
+    names, so the same rows hash equal under plain names."""
+    rows = [("1", "X", None), ("10", "9", "y")]
+    odd = spark.createDataFrame(rows, "`a.b` string, `c``d` string, `e f` string")
+    plain = spark.createDataFrame(rows, "p string, q string, r string")
+    got = [r[0] for r in odd.select(row_hash(odd.columns, odd)).collect()]
+    want = [r[0] for r in plain.select(row_hash(plain.columns, plain)).collect()]
+    assert got == want
+    assert with_row_hash(odd, out="h").select("h").collect() == with_row_hash(
+        plain, out="h"
+    ).select("h").collect()
+
+
 def test_duckdb_parity_customer(spark, sf_dir):
     """The same hash expression in Spark and DuckDB must agree on real
     mixed-type rows (int64, string, int32, double) — this is what the

@@ -276,3 +276,81 @@ def test_tests_pass_no_absolute_cwd():
             ):
                 found.append(f"{path.name}:{node.value.lineno}")
     assert found == []
+
+
+def test_footer_schema_maps_arrow_types(tmp_path):
+    """``sources.reader.footer_schema`` (no JVM) over parquet files that
+    pyarrow writes: each covered Arrow type maps to the Spark type that
+    parquet schema inference gives it, every field nullable; a Spark
+    schema stored in the footer is used verbatim; unsigned 64-bit ints,
+    nanosecond timestamps (also nested), durations, times and nulls return
+    ``None`` (the opener then lets Spark infer)."""
+    import datetime
+    import decimal
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from etl_pack_spark.sources.reader import SPARK_ROW_METADATA, footer_schema
+
+    ts = datetime.datetime(2020, 1, 2, 3, 4, 5)
+    day = datetime.date(2020, 1, 2)
+    covered = [
+        (pa.array([True]), T.BooleanType()),
+        (pa.array([1], pa.int8()), T.ByteType()),
+        (pa.array([1], pa.int16()), T.ShortType()),
+        (pa.array([1], pa.int32()), T.IntegerType()),
+        (pa.array([1], pa.int64()), T.LongType()),
+        (pa.array([1.5], pa.float32()), T.FloatType()),
+        (pa.array([1.5], pa.float64()), T.DoubleType()),
+        (pa.array(["x"], pa.string()), T.StringType()),
+        (pa.array(["x"], pa.large_string()), T.StringType()),
+        (pa.array([b"x"], pa.binary()), T.BinaryType()),
+        (pa.array([b"x"], pa.large_binary()), T.BinaryType()),
+        (pa.array([b"xy"], pa.binary(2)), T.BinaryType()),
+        (pa.array([day], pa.date32()), T.DateType()),
+        (pa.array([day], pa.date64()), T.DateType()),
+        (pa.array([ts], pa.timestamp("us")), T.TimestampNTZType()),
+        (pa.array([ts], pa.timestamp("ms")), T.TimestampNTZType()),
+        (pa.array([ts], pa.timestamp("us", tz="UTC")), T.TimestampType()),
+        (pa.array([decimal.Decimal("1.25")], pa.decimal128(10, 2)), T.DecimalType(10, 2)),
+        (pa.array([[1.0]], pa.list_(pa.float32())), T.ArrayType(T.FloatType(), True)),
+        (pa.array([[1]], pa.large_list(pa.int64())), T.ArrayType(T.LongType(), True)),
+        (pa.array([[1.0, 2.0]], pa.list_(pa.float32(), 2)), T.ArrayType(T.FloatType(), True)),
+        (pa.array([[("k", 1)]], pa.map_(pa.string(), pa.int64())),
+         T.MapType(T.StringType(), T.LongType(), True)),
+        (pa.array([{"x": 1, "y": [ts]}],
+                  pa.struct([("x", pa.int64()), ("y", pa.list_(pa.timestamp("us")))])),
+         T.StructType([T.StructField("x", T.LongType(), True),
+                       T.StructField("y", T.ArrayType(T.TimestampNTZType(), True), True)])),
+    ]
+
+    def write(name: str, table: pa.Table) -> str:
+        path = str(tmp_path / f"{name}.parquet")
+        pq.write_table(table, path)
+        return path
+
+    for i, (arr, want) in enumerate(covered):
+        path = write(f"c{i}", pa.table({"c": arr}))
+        assert footer_schema(path) == T.StructType([T.StructField("c", want, True)]), arr.type
+    # with inferTimestampNTZ off, naive timestamps infer as TIMESTAMP
+    naive = write("naive", pa.table({"c": pa.array([ts], pa.timestamp("us"))}))
+    assert footer_schema(naive, ntz=False)[0].dataType == T.TimestampType()
+
+    for arr in (
+        pa.array([1], pa.uint64()),
+        pa.array([ts], pa.timestamp("ns")),
+        pa.array([[ts]], pa.list_(pa.timestamp("ns"))),
+        pa.array([1], pa.duration("us")),
+        pa.array([1], pa.time64("us")),
+        pa.array([None], pa.null()),
+    ):
+        assert footer_schema(write(str(arr.type), pa.table({"c": arr}))) is None, arr.type
+
+    # a Spark-written footer: its own schema JSON wins, made nullable
+    spark_schema = T.StructType([T.StructField("c", T.LongType(), False)])
+    meta = {SPARK_ROW_METADATA: json.dumps(spark_schema.jsonValue()).encode()}
+    s1 = write("s1", pa.table({"c": pa.array([1], pa.int32())}).replace_schema_metadata(meta))
+    assert footer_schema(s1) == T.StructType([T.StructField("c", T.LongType(), True)])

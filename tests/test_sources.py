@@ -4,6 +4,8 @@ schema normalization (T1/T2)."""
 from __future__ import annotations
 
 import datetime
+import glob
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,7 +20,7 @@ from etl_pack_spark.schema import (
     universal_struct,
 )
 from etl_pack_spark.sources.jdbc import jdbc_reader
-from etl_pack_spark.sources.reader import ReadSpec, windowed_read
+from etl_pack_spark.sources.reader import TABLES, ReadSpec, open_parquet, windowed_read
 
 LO = datetime.datetime(1996, 1, 1)
 HI = datetime.datetime(1996, 12, 31)
@@ -57,6 +59,84 @@ def test_filter_and_projection_pushed_to_parquet(spark, sf_dir):
     plan = windowed_read(spark, sf_dir, spec)._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [IsNotNull(l_shipdate)" in plan
     assert "l_extendedprice" not in plan  # column pruning happened
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_open_parquet_matches_inference_on_fixtures(spark, sf_dir, count_jobs, sf):
+    """The footer-read schema equals Spark's inferred one on every
+    fixture table, and the open submits no Spark job."""
+    root = os.path.join(os.path.dirname(sf_dir), sf)
+    if not os.path.isdir(root):
+        pytest.skip(f"no {sf} fixtures")
+    for t in TABLES:
+        path = f"{root}/{t}.parquet"
+        schema, jobs = count_jobs(lambda: open_parquet(spark, path).schema)
+        assert jobs == 0, t
+        assert schema == spark.read.parquet(path).schema, t
+
+
+def test_open_parquet_matches_inference_on_transfer_target(spark, sf_dir, tmp_path, count_jobs):
+    """A Spark-written target grown by three firings: the directory, its
+    ``file:`` URI and a single part file all open with the inferred
+    schema and no job."""
+    from etl_pack_spark.plans.transfer import TransferConfig, run_transfer
+
+    target = str(tmp_path / "target")
+    for lo, hi in ((1993, 1995), (1994, 1996), (1996, 1999)):
+        window = ("l_shipdate", datetime.datetime(lo, 1, 1), datetime.datetime(hi, 1, 1))
+        run_transfer(spark, TransferConfig(sf_dir, "lineitem", target, window=window))
+    part = sorted(glob.glob(f"{target}/part-*.parquet"))[0]
+    for path in (target, "file://" + target, part):
+        schema, jobs = count_jobs(lambda: open_parquet(spark, path).schema)
+        assert jobs == 0, path
+        assert schema == spark.read.parquet(path).schema, path
+    assert open_parquet(spark, target).count() == spark.read.parquet(target).count()
+
+
+def test_open_parquet_disagreeing_footers_take_the_first_file(spark, tmp_path, count_jobs):
+    """Files whose footers disagree: Spark's inference reads only the
+    first data file in path order, and so does the opener (no job)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    target = tmp_path / "mixed"
+    target.mkdir()
+    pq.write_table(pa.table({"c": pa.array([1], pa.int32()), "d": ["x"]}), target / "part-1.parquet")
+    pq.write_table(pa.table({"c": pa.array([2], pa.int64())}), target / "part-0.parquet")
+    schema, jobs = count_jobs(lambda: open_parquet(spark, str(target)).schema)
+    assert jobs == 0
+    assert schema == spark.read.parquet(str(target)).schema
+    assert schema.fieldNames() == ["c"]
+
+
+def test_open_parquet_partitioned_target_falls_back(spark, sf_dir, tmp_path, count_jobs):
+    """``k=v`` subdirectories carry partition columns the footers do not
+    hold: the open takes Spark's inference, and the schemas agree."""
+    from etl_pack_spark.sinks.writers import append_table
+
+    target = str(tmp_path / "by_region")
+    append_table(spark.read.parquet(f"{sf_dir}/nation.parquet"), target, partition_by=["n_regionkey"])
+    schema, jobs = count_jobs(lambda: open_parquet(spark, target).schema)
+    assert jobs >= 1
+    assert schema == spark.read.parquet(target).schema
+    assert "n_regionkey" in schema.fieldNames()
+
+
+def test_open_parquet_footer_failure_keeps_rows(spark, sf_dir, count_jobs, monkeypatch):
+    """Forced fallback: a footer read that raises leaves the open to
+    Spark's inference (one job) with the same rows."""
+    import pyarrow.parquet as pq
+
+    path = f"{sf_dir}/nation.parquet"
+    want = sorted(map(tuple, open_parquet(spark, path).collect()))
+
+    def fail(*args, **kwargs):
+        raise OSError("footer read failed")
+
+    monkeypatch.setattr(pq, "read_schema", fail)
+    df, jobs = count_jobs(lambda: open_parquet(spark, path))
+    assert jobs >= 1
+    assert sorted(map(tuple, df.collect())) == want
 
 
 def test_jdbc_reader_options(spark):

@@ -687,7 +687,7 @@ def test_compactor_publishes_watermark_and_resolve_agrees(spark, tmp_path):
         "doc_id long, mh_0 long, __batch long",
     ).write.parquet(store)
     n = compact_signature_store(spark, store)
-    assert n == 2
+    assert n == 2 == resolve_signature_store(spark, store).count()
     assert compaction_watermark(spark, store) == 5
     # scheme-aware marker IO: the same marker resolves via a file: URI
     assert compaction_watermark(spark, "file://" + store) == 5
@@ -712,7 +712,7 @@ def test_compactor_publishes_watermark_and_resolve_agrees(spark, tmp_path):
     assert with_marker == resolved() == [(1, 99), (2, 77), (3, 33)]
 
     # re-compacting advances the watermark past the tail
-    compact_signature_store(spark, store)
+    assert compact_signature_store(spark, store) == 3 == resolve_signature_store(spark, store).count()
     assert compaction_watermark(spark, store) == 7
     assert resolved() == [(1, 99), (2, 77), (3, 33)]
 

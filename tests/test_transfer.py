@@ -38,6 +38,26 @@ def test_transfer_is_idempotent(spark, sf_dir, tmp_path):
     assert spark.read.parquet(target).count() == src_cnt
 
 
+def test_firing_job_counts(spark, sf_dir, tmp_path, count_jobs):
+    """A firing into a missing target runs one Spark job (the write). A
+    warm firing runs two: the broadcast of the target's row hashes and
+    the write. Both opens read their schema from the parquet footers,
+    and the anti-join's build side is the plain hash projection, with
+    no distinct shuffle before it."""
+    target = str(tmp_path / "lineitem_jobs")
+    w1 = ("l_shipdate", datetime.datetime(1995, 1, 1), datetime.datetime(1996, 6, 30))
+    w2 = ("l_shipdate", datetime.datetime(1996, 1, 1), datetime.datetime(1996, 12, 31))
+    cold, cold_jobs = count_jobs(lambda: run_transfer(spark, TransferConfig(sf_dir, "lineitem", target, window=w1)))
+    warm, warm_jobs = count_jobs(lambda: run_transfer(spark, TransferConfig(sf_dir, "lineitem", target, window=w2)))
+    assert (cold_jobs, warm_jobs) == (1, 2)
+    assert cold.rows > 0 and warm.rows > 0
+    assert spark.read.parquet(target).count() == (
+        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        .where(F.col("l_shipdate").between(w1[1], w2[2]))
+        .count()
+    )
+
+
 def test_partitioned_target_prunes_snapshot(spark, sf_dir, tmp_path):
     """With a target partitioned by the cursor's month, the H2 snapshot
     read must prune partitions via the window predicate — this is what
