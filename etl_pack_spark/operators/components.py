@@ -304,10 +304,11 @@ def cluster_dedup(
     sizes (a shuffled hash join — the correct plan for a
     billion-loser anti-join). The best/winner picks stay map-side-
     combinable aggregates either way. Pass ``clusters`` (a prior
-    :func:`neardup_clusters` output, ideally persisted — the probe
-    and the joins re-execute an unpersisted lineage) when the caller
-    already labeled the graph — the components computation is the one
-    iterative stage and must not silently run twice.
+    :func:`neardup_clusters` output, as returned: its labels are
+    already persisted or driver-local, and a persist on top hides the
+    driver-local leaf from the probe) when the caller already labeled
+    the graph — the components computation is the one iterative stage
+    and must not silently run twice.
     """
     if clusters is None:
         # connected_components returns its labels frame persisted (the
@@ -315,7 +316,10 @@ def cluster_dedup(
         # the size probe below never re-runs the iterative stage
         clusters = neardup_clusters(pairs, id_col)
     bound = guards.MAX_BROADCAST_MODEL_ROWS
-    # zero jobs on the union-find path's driver-local labeling (r16)
+    # zero jobs when clusters is the union-find path's driver-local
+    # frame as returned (a LocalRelation carries its row count); a
+    # bounded limit probe on the distributed path's persisted labels,
+    # or on a persist over the local frame (3 jobs at fixture scale)
     small = guards.bounded_count(clusters, bound) <= bound
 
     def hint(frame: DataFrame) -> DataFrame:

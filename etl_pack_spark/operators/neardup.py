@@ -163,15 +163,18 @@ def _drop_hot_buckets(rows: DataFrame, keys: list[str], cap: int) -> DataFrame:
     whose every shared bucket is overfull — which at cap≫1 means
     near-identical floods that exact dedup upstream should own.
 
-    Adaptive since r7: the overfull-key frame is materialized once
-    (pooled persist — tiny by construction: heavy hitters are few)
-    and probed with a bounded ``limit(1).count()``. When NO bucket is
-    overfull — every healthy corpus — the anti-join never enters the
-    plan, so the default-on cap costs one combinable count over the
-    bucketed rows (whose upstream signature frame the callers persist)
-    instead of an extra count + broadcast + probe pass per candidate
-    join (most of the r6 +48%/+22% minhash/simhash headline cost).
-    When buckets ARE overfull, the engagement is no longer silent: the
+    Adaptive since r7: the overfull keys are collected to the driver
+    in ONE action (tiny by construction: heavy hitters are few, and a
+    broadcast build side passes through the driver anyway). That one
+    action answers the emptiness test, the warning's key count and the
+    anti-join's build side (a persisted key frame would need a job of
+    its own to materialize the cache). When NO bucket is overfull — every
+    healthy corpus — the anti-join never enters the plan, so the
+    default-on cap costs one combinable count over the bucketed rows
+    (whose upstream signature frame the callers persist) instead of an
+    extra count + broadcast + probe pass per candidate join (most of
+    the r6 +48%/+22% minhash/simhash headline cost). When buckets ARE
+    overfull, the engagement is no longer silent: the
     count of dropped bucket keys is logged at WARNING, because a cap
     engaging means near-identical floods larger than ``cap`` are
     escaping near-dup dedup (exact dedup upstream owns them). The
@@ -182,17 +185,19 @@ def _drop_hot_buckets(rows: DataFrame, keys: list[str], cap: int) -> DataFrame:
     30× replication probe (interleaved A/B, SCALE.md round-7) than
     recomputing the cheap banding expressions from the cached
     signatures."""
-    over = _pooled_persist(overfull_buckets(rows, keys, cap).drop("count"))
-    if guards.bounded_count(over, 0) == 0:
+    over = overfull_buckets(rows, keys, cap).drop("count")
+    hot = over.collect()
+    if not hot:
         return rows
     _log.warning(
         "heavy-hitter cap engaged: %d bucket key(s) on %s exceed %d "
         "members and are excluded from candidate generation "
         "(near-identical floods above the cap escape near-dup dedup; "
         "inspect them with overfull_buckets())",
-        over.count(), keys, cap,
+        len(hot), keys, cap,
     )
-    return rows.join(F.broadcast(over), keys, "left_anti")
+    hot_keys = rows.sparkSession.createDataFrame(hot, over.schema)
+    return rows.join(F.broadcast(hot_keys), keys, "left_anti")
 
 
 def lsh_candidate_pairs(
@@ -680,6 +685,15 @@ def simhash_signature(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     plan is already hash-partitioned by doc id, the extra groupBy
     introduces NO extra shuffle (HashPartitioning(id) satisfies the
     (id, tok) clustering).
+
+    The words and the aggregate are built from SQL strings, in about
+    100 driver calls plus the shared ``tokens`` Column: one
+    ``selectExpr`` for the four words, and ONE aggregate expression
+    that renders the 64 bit sums straight into the hex digest (the
+    optimizer folds a separate render projection into the aggregate
+    anyway). Building the same plan one Column function at a time
+    costs about 5,800 py4j round trips, over half a second of driver
+    time before any job runs.
     """
     tok = (
         df.repartition(F.col(id_col))  # parallelize the CPU-bound explode
@@ -687,33 +701,24 @@ def simhash_signature(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         .groupBy(id_col, "tok")
         .count()
         .withColumn("h", F.md5("tok"))
-        .select(
-            F.col(id_col),
-            F.col("count"),
-            *[
-                F.expr(f"CAST(conv(substr(h, {4 * w + 1}, 4), 16, 10) AS INT)").alias(f"w{w}")
-                for w in range(4)
-            ],
-        )
+        .selectExpr("*", *[
+            f"CAST(conv(substr(h, {4 * w + 1}, 4), 16, 10) AS INT) AS w{w}"
+            for w in range(4)
+        ])
     )
-    sums = [
-        F.sum(
-            F.expr(f"((shiftright(w{j // 16}, {15 - j % 16}) & 1) * 2 - 1) * count")
-        ).alias(f"s{j}")
+    bit = [
+        f"sum(((shiftright(w{j // 16}, {15 - j % 16}) & 1) * 2 - 1) * count) > 0"
         for j in range(64)
     ]
-    agg = tok.groupBy(id_col).agg(*sums)
-    nibbles = [
-        (
-            F.when(F.col(f"s{4 * p}") > 0, 8).otherwise(0)
-            + F.when(F.col(f"s{4 * p + 1}") > 0, 4).otherwise(0)
-            + F.when(F.col(f"s{4 * p + 2}") > 0, 2).otherwise(0)
-            + F.when(F.col(f"s{4 * p + 3}") > 0, 1).otherwise(0)
+    hex_chars = ", ".join(
+        f"substr('{HEX}', "
+        + " + ".join(
+            f"CASE WHEN {bit[4 * p + b]} THEN {8 >> b} ELSE 0 END" for b in range(4)
         )
+        + " + 1, 1)"
         for p in range(16)
-    ]
-    hex_chars = [F.substring(F.lit(HEX), 1, 16).substr(n + 1, F.lit(1)) for n in nibbles]
-    return agg.select(F.col(id_col), F.concat(*hex_chars).alias("simhash"))
+    )
+    return tok.groupBy(id_col).agg(F.expr(f"concat({hex_chars}) AS simhash"))
 
 
 # nibble popcount lookup: POP[v] = number of set bits in v (0..15)

@@ -166,7 +166,12 @@ def prepare_pretraining_corpus(
     points via ``DataFrame.checkpoint`` into the SparkContext's
     checkpoint directory — identical output (parity-pinned), plan
     truncation kept, executor loss recoverable, at the cost of one
-    distributed-FS write per boundary.
+    distributed-FS write per boundary. With it off, ``kept`` is still
+    materialized once, as a pooled ``persist`` (lineage kept, LRU-
+    bounded): the near-dup signatures and the dedup's anti-join both
+    read it, so the trade at scale is one memory-and-disk copy of the
+    curated corpus against a second corpus scan plus a second
+    curation shuffle.
     """
     if eval_df is not None and eval_store is not None:
         raise ValueError(
@@ -251,17 +256,25 @@ def prepare_pretraining_corpus(
     # near-dup cluster dedup over the CURATED corpus: one survivor per
     # transitive simhash cluster (pairs are pre-thresholded, so the
     # component graph is tiny relative to the corpus)
-    kept = cp(kept)
+    from etl_pack_spark.operators.cache import pooled_persist
+    from etl_pack_spark.operators.components import neardup_clusters
+
+    # kept feeds the signature stage AND the dedup's anti-join: without
+    # a materialization the scan → spread → curate → join prefix runs
+    # once for the hot-block probe and again for the packing count (see
+    # the docstring for the trade). The checkpointers materialize it
+    # already; a persist on top would store it twice.
+    kept = cp(kept) if checkpoint_stages else pooled_persist(kept)
     pairs = neardup.simhash_neardup_pairs(
         kept, "doc_id", "text", max_hamming=max_hamming
     ).select("id_a", "id_b")
     # label the pair graph ONCE (components is the only iterative
-    # stage); the split reassignment and the dedup both consume the
-    # persisted labels
-    from etl_pack_spark.operators.cache import pooled_persist
-    from etl_pack_spark.operators.components import neardup_clusters
-
-    clusters = pooled_persist(neardup_clusters(pairs, "doc_id"))
+    # stage); the split reassignment and the dedup both consume these
+    # labels. connected_components returns them persisted (the
+    # distributed loop) or as a driver-local frame (the union-find
+    # path), which cluster_dedup's size probe answers with zero jobs;
+    # a persist on top would hide that leaf and cost the probe a job.
+    clusters = neardup_clusters(pairs, "doc_id")
 
     if leakage_safe_split:
         # reassign splits so a near-dup CLUSTER lands whole in one

@@ -11,8 +11,33 @@ is enabled for every pandas-UDF exchange.
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory(env: Mapping[str, str], meminfo: str) -> str:
+    """The ``spark.driver.memory`` a session gets: ``SPARK_GRAFT_DRIVER_MEM``
+    when set, else a quarter of the box's ``MemTotal`` (``meminfo`` is
+    the text of ``/proc/meminfo``), between 1 GiB and 48 GiB. A local
+    session's driver JVM is the whole engine, and a heap larger than
+    the box lets it grow until the machine, not Spark, runs out. 48g
+    when the text names no ``MemTotal`` (no ``/proc``)."""
+    if env.get("SPARK_GRAFT_DRIVER_MEM"):
+        return env["SPARK_GRAFT_DRIVER_MEM"]
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            mib = int(line.split()[1]) // 1024
+            return f"{min(48 * 1024, max(1024, mib // 4))}m"
+    return "48g"
+
+
+def _meminfo() -> str:
+    try:
+        with open("/proc/meminfo") as fh:
+            return fh.read()
+    except OSError:
+        return ""
 
 
 def get_spark(
@@ -25,7 +50,8 @@ def get_spark(
 
     ``SPARK_GRAFT_CPUS`` (driver contract) sizes local parallelism;
     on a real cluster ``master`` comes from spark-submit and the
-    local[] fallback is ignored.
+    local[] fallback is ignored. The driver heap follows
+    :func:`driver_memory`.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
@@ -48,7 +74,7 @@ def get_spark(
         # sources.reader rebuilds a proper timestamp column from it
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory(os.environ, _meminfo()))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

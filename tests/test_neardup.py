@@ -69,6 +69,44 @@ def test_simhash_similar_docs_close(spark):
     assert hamming(by_id[1], by_id[2]) < hamming(by_id[1], by_id[3])
 
 
+def test_simhash_signature_matches_duckdb_twin(spark, sf_dir):
+    """The signature equals its DuckDB twin row for row on the fixture
+    corpus."""
+    from etl_pack_spark.oracle import duck_connect
+
+    docs = read_table(spark, sf_dir, "documents")
+    got = {r["doc_id"]: r["simhash"]
+           for r in neardup.simhash_signature(docs, "doc_id", "text").collect()}
+    con = duck_connect(sf_dir)
+    try:
+        want = dict(con.execute(
+            neardup.simhash_signature_sql("documents", "doc_id", "text")
+        ).fetchall())
+    finally:
+        con.close()
+    assert got and got == want
+
+
+def test_simhash_signature_builds_in_few_driver_calls(spark, sf_dir, monkeypatch):
+    """The signature is built from SQL strings: one build makes at most
+    200 py4j round trips, where a Column-at-a-time build of the same
+    plan makes thousands."""
+    docs = read_table(spark, sf_dir, "documents")
+    neardup.simhash_signature(docs, "doc_id", "text")  # first-use lookups
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    neardup.simhash_signature(docs, "doc_id", "text")
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 200
+
+
 def test_ngram_jaccard_candidate_path_matches_brute_force(spark, sf_dir):
     """r15 rewrite pin: the shared-shingle candidate path (threshold>0)
     must emit EXACTLY the pairs the all-pairs BNLJ baseline emits —
@@ -226,7 +264,7 @@ class TestHeavyHitterCap:
     """Default-on hot-bucket caps: mass-duplicated signatures must not
     dominate candidate generation; distinct near-pairs survive."""
 
-    def test_simhash_block_cap_drops_flood_keeps_pair(self, spark):
+    def test_simhash_block_cap_drops_flood_keeps_pair(self, spark, count_jobs):
         from etl_pack_spark.operators import neardup
 
         flood = [(i, "the same flooded boilerplate page text repeated "
@@ -239,18 +277,21 @@ class TestHeavyHitterCap:
                 "statistics collection and cost based optimization")
         near = [(100, base), (101, base + " appendix")]
         df = spark.createDataFrame(flood + near, "doc_id long, text string")
+        capped, jobs = count_jobs(lambda: neardup.simhash_neardup_pairs(
+            df, "doc_id", "text", max_block_freq=10
+        ).collect())
         uncapped = neardup.simhash_neardup_pairs(
             df, "doc_id", "text", max_block_freq=None
         )
-        capped = neardup.simhash_neardup_pairs(
-            df, "doc_id", "text", max_block_freq=10
-        )
         got_u = {frozenset((r["id_a"], r["id_b"])) for r in uncapped.collect()}
-        got_c = {frozenset((r["id_a"], r["id_b"])) for r in capped.collect()}
+        got_c = {frozenset((r["id_a"], r["id_b"])) for r in capped}
         assert frozenset((100, 101)) in got_u
         assert frozenset((100, 101)) in got_c          # unique pair survives
         # the 40-doc flood (780 pairs) is capped away
         assert len(got_u) > 700 and len(got_c) < 10
+        # one collect of the overfull keys serves the emptiness test, the
+        # warning's count and the anti-join's build side
+        assert jobs == 9
 
     def test_minhash_bucket_cap_same_semantics(self, spark):
         from etl_pack_spark.operators import neardup

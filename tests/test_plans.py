@@ -354,3 +354,17 @@ def test_footer_schema_maps_arrow_types(tmp_path):
     meta = {SPARK_ROW_METADATA: json.dumps(spark_schema.jsonValue()).encode()}
     s1 = write("s1", pa.table({"c": pa.array([1], pa.int32())}).replace_schema_metadata(meta))
     assert footer_schema(s1) == T.StructType([T.StructField("c", T.LongType(), True)])
+
+
+def test_driver_memory_sizes_from_the_box():
+    """With ``SPARK_GRAFT_DRIVER_MEM`` unset the driver heap is a
+    quarter of ``MemTotal``, between 1 and 48 GiB; the variable wins
+    when set. No JVM."""
+    from etl_pack_spark.session import driver_memory
+
+    box = "MemTotal:       16479424 kB\nMemFree:         9000000 kB\n"
+    assert driver_memory({}, box) == "4023m"
+    assert driver_memory({"SPARK_GRAFT_DRIVER_MEM": "6g"}, box) == "6g"
+    assert driver_memory({}, "MemTotal: 2097152 kB\n") == "1024m"
+    assert driver_memory({}, "MemTotal: 1073741824 kB\n") == "49152m"
+    assert driver_memory({}, "") == "48g"

@@ -453,6 +453,33 @@ def test_pretrain_checkpoint_stages_is_pure_acceleration(spark, sf_dir):
     assert lazy == fast and lazy
 
 
+def test_pipeline_job_counts(spark, sf_dir, count_jobs, monkeypatch):
+    """A warm pipeline (cache cleared between runs, as perfbench does)
+    runs a pinned number of Spark jobs, and cluster_dedup's size probe
+    runs none on the union-find path's driver-local labels."""
+    from etl_pack_spark.plans import pretrain
+
+    docs = _docs(spark, sf_dir)
+    real = pretrain.cluster_dedup
+    probe_jobs = []
+
+    def spy(*args, **kwargs):
+        out, jobs = count_jobs(lambda: real(*args, **kwargs))
+        probe_jobs.append(jobs)
+        return out
+
+    monkeypatch.setattr(pretrain, "cluster_dedup", spy)
+    warm = prepare_pretraining_corpus(docs).toArrow()
+    monkeypatch.undo()
+    spark.catalog.clearCache()
+    out, jobs = count_jobs(lambda: prepare_pretraining_corpus(docs).toArrow())
+    assert probe_jobs == [0]
+    assert out.num_rows == warm.num_rows > 0
+    # the curated corpus is scanned and curated once per run
+    assert jobs == 23
+    spark.catalog.clearCache()
+
+
 def test_pretrain_disposition_string_ids(spark):
     """r12 (r11 VERDICT #3 / ADVICE medium): dup_of on a STRING-id
     corpus — the exact_dup pointer, the neardup_dup survivor pointer,
