@@ -27,7 +27,6 @@ from etl_pack_spark.operators.sampling import (  # noqa: F401
     domain_cap_sql,
     grouped_split_assign,
     grouped_split_sql,
-    hash_unit,
     mixture_resample,
     split_assign,
     stratified_sample,
@@ -36,9 +35,7 @@ from etl_pack_spark.operators.textops import (  # noqa: F401
     fingerprint,
     language_id,
     lexicon_sentiment,
-    quality_metrics,
     redact_pii,
-    repetition_ratio,
     text_signals,
     token_counts,
     unigram_logprob,
@@ -64,7 +61,6 @@ from etl_pack_spark.operators.multimodal import (  # noqa: F401
     pdf_text,
     png_decode,
     resize_image,
-    sample_frames,
 )
 from etl_pack_spark.operators.quality import expect, profile  # noqa: F401
 from etl_pack_spark.operators.skew import salted_join  # noqa: F401
@@ -95,7 +91,6 @@ from etl_pack_spark.operators.retrieval import (  # noqa: F401
     bm25_topk,
     build_postings,
     term_stats,
-    tfidf_weights,
 )
 from etl_pack_spark.operators.chunking import (  # noqa: F401
     chunk_documents,

@@ -1297,35 +1297,6 @@ def media_features(
     return media.select("media_id", "content", *pass_cols).mapInPandas(run, schema=schema)
 
 
-def sample_frames(media: DataFrame, every_n_bytes: int = 64, fake: bool = False) -> DataFrame:
-    """Video frame sampling stub: emits one row per sampled "frame"
-    (offset positions). REAL frame extraction exists for Motion-JPEG
-    containers — see :func:`video_frames` (sample-table spans through
-    the stdlib JPEG decoder); other codecs need a video library, and
-    the fake path samples byte offsets with the same output contract."""
-    schema = _out_schema(
-        media,
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("offset", T.LongType(), False),
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "video frame extraction requires a media library not present "
-                    "in this environment; pass fake=True for the stand-in"
-                )
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                n = 0 if content is None else len(content)
-                for i, off in enumerate(range(0, n, every_n_bytes)):
-                    rows.append((mid, i, off))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "offset"])
-
-    return media.select("media_id", "content").mapInPandas(run, schema=schema)
-
-
 def _mp4_sample_extractor():
     """Factory for a stdlib-only ISO-BMFF SAMPLE-TABLE reader: walks
     moov→trak→mdia→minf→stbl and resolves stsd (codec fourcc), stsz

@@ -144,39 +144,6 @@ def term_stats(postings: DataFrame, n_docs: int) -> DataFrame:
     )
 
 
-def tfidf_weights(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Sparse TF-IDF document vectors as rows ``(id, term, weight)``
-    with ln-damped tf: ``(1 + ln(tf)) * idf``.
-
-    Row-sparse output composes with any downstream join/agg without a
-    dense vocabulary-width materialization (at 100 TB the vocabulary is
-    millions wide — dense vectors are not an option).
-
-    The postings feed TWO consumers (the vocabulary-sized idf
-    aggregation and the weight join), so they are pooled-persisted:
-    unpersisted, each consumer re-executes the corpus-wide
-    tokenize+explode+groupBy build — the identical double-scan lineage
-    the BM25 forms closed in r10/r11 (exchange reuse does not kick in:
-    the executed plans there showed two full document scans and zero
-    ReusedExchange). Here the persisted frame is corpus-sized but slim
-    (term, id, tf, dl — no text), the narrowest thing that cuts the
-    second scan.
-    """
-    from etl_pack_spark.operators.cache import pooled_persist
-
-    postings = pooled_persist(build_postings(df, id_col, text_col))
-    n_docs = df.count()
-    stats = term_stats(postings, n_docs)
-    return (
-        postings.join(stats, "term")
-        .select(
-            "id",
-            "term",
-            ((1.0 + F.log("tf")) * F.col("idf")).alias("weight"),
-        )
-    )
-
-
 def bm25_topk(
     df: DataFrame,
     id_col: str,

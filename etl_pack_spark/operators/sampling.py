@@ -17,7 +17,7 @@ boundary) — this is a training-data extension (SURVEY §7.3).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 # 28-bit hash space: first 7 hex chars of md5. Integer thresholds in
@@ -31,11 +31,6 @@ def _h28_spark(key: str, seed: str) -> str:
 
 def _h28_sql(key: str, seed: str) -> str:
     return f"CAST('0x' || substr(md5(concat('{seed}:', CAST({key} AS VARCHAR))), 1, 7) AS BIGINT)"
-
-
-def hash_unit(key_col: str, seed: str = "s0") -> Column:
-    """Uniform-ish [0,1) score from the key — for ad-hoc thresholding."""
-    return F.expr(_h28_spark(key_col, seed)) / F.lit(float(SPACE))
 
 
 def stratified_sample(

@@ -81,29 +81,6 @@ def language_id_sql(table: str, id_col: str, text_col: str) -> str:
     """
 
 
-def quality_metrics(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Length / punctuation / stopword-ratio quality signals. All
-    ratios are int/int → exact doubles."""
-    stop_hits = _marker_count("__toks", "en")
-    n_toks = F.size("__toks")
-    # guard: zero-token docs yield NULL ratios identically on both engines
-    safe = lambda num: F.when(n_toks > 0, num.cast("double") / n_toks.cast("double"))  # noqa: E731
-    return (
-        df.select(F.col(id_col), F.col(text_col).alias("__t"), tokens(text_col).alias("__toks"))
-        .select(
-            F.col(id_col),
-            F.length("__t").alias("n_chars"),
-            n_toks.alias("n_tokens"),
-            (F.length("__t") - F.length(F.regexp_replace(F.col("__t"), PUNCT_RE, "")))
-            .alias("n_punct"),
-            stop_hits.alias("n_stopwords"),
-            safe(F.expr("aggregate(transform(__toks, x -> length(x)), 0, (a, v) -> a + v)"))
-            .alias("avg_token_len"),
-            safe(stop_hits).alias("stopword_ratio"),
-        )
-    )
-
-
 def quality_signals(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
     """Combined per-doc quality gate: length/punct/stopword metrics plus
     the k-gram repetition signal, in ONE projection pass (single scan,
@@ -213,27 +190,6 @@ def redact_pii_sql(table: str, id_col: str, text_col: str) -> str:
     return f"""
     SELECT {id_col}, {', '.join(counts)}, {expr} AS redacted FROM {table}
     """
-
-
-def repetition_ratio(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """Boilerplate/repetition signal: 1 - distinct_kgrams/total_kgrams
-    (0 = no repetition). High values flag template/spam text — a
-    standard corpus-quality gate."""
-    sh = shingles_expr("__toks", k)
-    total = F.size("__sh")
-    uniq = F.size(F.array_distinct("__sh"))
-    ratio = F.when(total > 0,
-                   F.lit(1.0) - uniq.cast("double") / total.cast("double"))
-    return (
-        df.select(F.col(id_col), tokens(text_col).alias("__toks"))
-        .select(F.col(id_col), sh.alias("__sh"))
-        .select(
-            F.col(id_col),
-            total.alias("n_grams"),
-            uniq.alias("n_distinct"),
-            ratio.alias("repetition"),
-        )
-    )
 
 
 def fingerprint(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:

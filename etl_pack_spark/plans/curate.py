@@ -259,59 +259,3 @@ def curate_disposition_sql(table: str) -> str:
            CASE WHEN doc_id <> win THEN win END AS dup_of
     FROM surv
     """
-
-
-def curate_pack_corpus(
-    docs: DataFrame,
-    eval_df: DataFrame | None = None,
-    budget: int = 2048,
-    shards: int | None = None,
-) -> DataFrame:
-    """The full training-batch path: curate → (optional) decontaminate
-    against an eval set → pack the train split to a token budget.
-
-    Returns ``(doc_id, lang, split, n_tokens, pack_id, oversize)`` —
-    val/test docs carry NULL pack columns (only the train split is
-    packed). Composition shape at scale: curate's single scan + one
-    dedup exchange, plus one broadcast semi-join (decontaminate — the
-    eval set is the small side), plus the packer's one hash-partition
-    shuffle. Nothing corpus-sized is collected, broadcast, or
-    re-scanned.
-    """
-    from etl_pack_spark.operators.contamination import decontaminate
-    from etl_pack_spark.operators.packing import pack_sequences
-    from etl_pack_spark.operators.textops import token_counts
-
-    from etl_pack_spark.operators.cache import pooled_persist
-
-    curated = curate_corpus(docs)
-    clean = docs.select("doc_id", "text")
-    if eval_df is not None:
-        clean = decontaminate(clean, eval_df, "doc_id", "text")
-    kept = curated.join(clean.select("doc_id"), "doc_id", "left_semi")
-    # persisted (r8): counted feeds the train/rest split branches, the
-    # packer's data-derived shard count, and the pack-result join —
-    # consumers that shuffle on different keys, so without the persist
-    # the curate + decontaminate + token-count lineage re-executes once
-    # per consumer
-    counted = pooled_persist(
-        kept.join(
-            token_counts(docs, "doc_id", "text").select(
-                "doc_id", F.col("n_pieces").alias("n_tokens")
-            ),
-            "doc_id",
-        )
-    )
-    train = counted.where(F.col("split") == "train")
-    rest = counted.where(F.col("split") != "train").select(
-        "doc_id", "lang", "split", "n_tokens",
-        F.lit(None).cast("long").alias("pack_id"),
-        F.lit(None).cast("boolean").alias("oversize"),
-    )
-    packed = pack_sequences(
-        train.select("doc_id", "n_tokens"), "doc_id", "n_tokens", budget, shards
-    )
-    train_packed = train.join(packed.select("doc_id", "pack_id", "oversize"), "doc_id")
-    return train_packed.select(
-        "doc_id", "lang", "split", "n_tokens", "pack_id", "oversize"
-    ).union(rest)

@@ -30,6 +30,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_pack_spark.sinks.fsio import _local_path
+
 
 @dataclass(frozen=True)
 class CompactionStats:
@@ -173,17 +175,6 @@ def zorder_key(
 _NUMERIC_PHYSICAL = {"INT32", "INT64", "FLOAT", "DOUBLE"}
 
 
-def _local_path(uri: str) -> str:
-    """``file:`` URI (any slash count) → plain POSIX path; other
-    schemes pass through for pyarrow's URI-aware open."""
-    if uri.startswith("file:"):
-        p = uri[len("file:"):]
-        while p.startswith("//"):
-            p = p[1:]
-        return p
-    return uri
-
-
 def _file_footer_bounds(uri: str, cols: list[str]) -> dict | None:
     """(min, max) per requested column from ONE parquet file's footer.
     ``None`` means "fall back to the agg scan": a column missing stats,
@@ -191,10 +182,10 @@ def _file_footer_bounds(uri: str, cols: list[str]) -> dict | None:
     import pyarrow.parquet as pq
 
     path = _local_path(uri)
-    if "://" in path:  # non-file scheme: object store via pyarrow fs
+    if path is None:  # non-file scheme: object store via pyarrow fs
         import pyarrow.fs as pafs
 
-        fs, rel = pafs.FileSystem.from_uri(path)
+        fs, rel = pafs.FileSystem.from_uri(uri)
         f = pq.ParquetFile(fs.open_input_file(rel))
     else:
         f = pq.ParquetFile(path)
@@ -351,16 +342,26 @@ def compact_partitions(
 
     Leaf discovery is Hadoop-FS (any scheme); the atomic SWAP is
     POSIX-rename, so in-place rewriting requires a locally-mounted
-    path — on object stores use a transactional table format instead.
+    path — on object stores use a transactional table format instead;
+    a remote ``root`` raises ``NotImplementedError``.
     Returns one :class:`CompactionStats` per REWRITTEN leaf (skipped
     leaves are absent: the common steady-state run returns []).
     """
     import os
 
+    from etl_pack_spark.sinks.atomic import (
+        posix_path,
+        publish_swap,
+        recover_swap,
+        stage_dir,
+    )
+
+    # the swap is POSIX-only: a remote root fails here, at entry,
+    # not as an os.walk that silently lists nothing
+    local_root = posix_path(root)
     if min_avg_mb is None:
         min_avg_mb = target_file_mb / 2
     out: list[CompactionStats] = []
-    from etl_pack_spark.sinks.atomic import publish_swap, recover_swap, stage_dir
 
     # recovery pre-pass: a leaf that crashed mid-swap exists ONLY as
     # its hidden backup (the leaf dir itself is gone, so leaf
@@ -370,7 +371,7 @@ def compact_partitions(
     # siblings, so orphans would accumulate dead bytes forever)
     import shutil as _shutil
 
-    for r, dirs, _ in os.walk(_local_path(root)):
+    for r, dirs, _ in os.walk(local_root):
         for d in list(dirs):
             if d.startswith(".") and d.endswith(".bak"):
                 recover_swap(os.path.join(r, d[1:-4]))

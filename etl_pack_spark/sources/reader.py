@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -185,23 +184,22 @@ def footer_schema(file: str, ntz: bool = True) -> T.StructType | None:
         return None
 
 
-_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
-
-
 def _local_parquet_files(spark: SparkSession, path: str) -> list[str] | None:
     """The data files Spark's listing would read under ``path`` when it
     is a local file or a flat local directory, else ``None``: another
     filesystem, a relative path, a glob, partition or other
     subdirectories, or summary files (which Spark would read the schema
     from)."""
-    if path.startswith("file:"):
-        path = "/" + path[len("file:"):].lstrip("/")
-    elif _SCHEME.match(path):
+    from etl_pack_spark.sinks.fsio import _local_path
+
+    local = _local_path(path)
+    if local is None:
         return None
-    else:
+    if not path.startswith("file:"):
         default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
         if not default_fs.startswith("file:"):
             return None
+    path = local
     # relative paths resolve against the JVM's start directory, which a
     # later chdir in Python does not move
     if not os.path.isabs(path) or any(ch in path for ch in "*?[{"):

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from etl_pack_spark.operators.dedup import incremental_load
 from etl_pack_spark.plans.merge import apply_cdc
+from etl_pack_spark.sinks import fsio
 from etl_pack_spark.sources.reader import open_parquet
 
 # a crashed ingest-lease holder blocks its store for at most this long
@@ -201,13 +202,12 @@ def stream_incremental_transfer(
     at-least-once delivery, the hash anti-join makes it effectively
     exactly-once on content (the same idempotence argument as the
     reference's re-runs, provider.go:218)."""
-    from etl_pack_spark.sinks.fsio import exists as fs_exists
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         target = None
         # scheme-aware (r9): a missed probe on an object-store target
         # would skip the snapshot anti-join and re-append every batch
-        if fs_exists(batch_df.sparkSession, target_path):
+        if fsio.exists(batch_df.sparkSession, target_path):
             target = open_parquet(batch_df.sparkSession, target_path)
         incremental_load(batch_df, target).write.mode("append").parquet(target_path)
 
@@ -356,7 +356,6 @@ def stream_quality_drift(
         signal_histogram,
     )
     from etl_pack_spark.operators.textops import text_signals
-    from etl_pack_spark.sinks.fsio import read_text
 
     base_df = spark.read.parquet(baseline_hist)
     if set(base_df.columns) != {"signal", "bucket", "n", "p"}:
@@ -365,7 +364,7 @@ def stream_quality_drift(
             "(expected columns signal/bucket/n/p — produce one with "
             "cli --drift DOCS --drift-save-baseline HIST)"
         )
-    stored = read_text(
+    stored = fsio.read_text(
         spark, baseline_hist.rstrip("/") + "/_drift_config.json"
     )
     if stored is None:
@@ -381,9 +380,7 @@ def stream_quality_drift(
     base_rows = [(r["signal"], r["bucket"], r["n"], r["p"])
                  for r in base_df.collect()]
 
-    from etl_pack_spark.sinks.fsio import exists as _fs_exists
-
-    if not _fs_exists(spark, source_path):
+    if not fsio.exists(spark, source_path):
         # deployed before the first slice landed: 0 batches, no
         # checkpoint to advance — the next firing picks it up (the
         # stream source itself raises PATH_NOT_FOUND on a missing dir
@@ -504,64 +501,26 @@ def stream_neardup_ingest(
         minhash_signature,
     )
     from etl_pack_spark.operators.tokenize import shingle_rows
-    from etl_pack_spark.sinks.fsio import exists as fs_exists
 
-    schema = spark.read.parquet(source_dir).schema
-    # ONE FIRING AT A TIME per store, enforced: the lease covers the
-    # whole firing, from the sidecar seed to the post-commit publishes,
-    # so no concurrent firing can seed from the same sidecar and
-    # publish a floor above this firing's still-uncommitted stamps
-    with _stamp_lease(spark, store_path, ttl_ms=lease_ttl_ms):
-        # one stamper per firing, seeded from the store's sidecar:
-        # stamps are monotone by construction, not by trusting the clock
-        stamps = _MonotoneStamps(spark, store_path)
-
-        def fold(batch_df: DataFrame, batch_id: int) -> None:
-            sess = batch_df.sparkSession
-            batch = batch_df.select(id_col, text_col)
-            sig_batch = minhash_signature(
-                shingle_rows(batch, id_col, text_col, k, distinct=False),
-                id_col,
-                num_hashes,
-            )
-            # scheme-aware probe: os.path here read an s3a: store as
-            # absent — EXISTING history silently skipped, missed dedup
-            if fs_exists(sess, store_path):
-                sig_old = (
-                    resolve_signature_store(sess, store_path, id_col)
-                    .drop("__batch")
-                    # replay absorber: a batch whose signatures already
-                    # landed must not self-match against them
-                    .join(batch.select(id_col), id_col, "left_anti")
-                )
-            else:
-                sig_old = sig_batch.limit(0)
-            matches = minhash_match_incremental(
+    def fold(batch_df: DataFrame, stamps: _MonotoneStamps) -> None:
+        batch = batch_df.select(id_col, text_col)
+        sig_batch = minhash_signature(
+            shingle_rows(batch, id_col, text_col, k, distinct=False),
+            id_col, num_hashes,
+        )
+        _fold_signatures(
+            store_path, matches_path, id_col, sig_batch, batch.select(id_col),
+            lambda sig_old: minhash_match_incremental(
                 batch, sig_old, id_col, text_col,
                 k=k, num_hashes=num_hashes, bands=bands, min_est=min_est,
-            )
-            # matches carry the same monotone epoch-millis stamp so
-            # downstream incremental consumers (update_cluster_store)
-            # can fold only the not-yet-processed tail; pair-reading
-            # code keeps taking DISTINCT over the deterministic
-            # (id_a, id_b, est) cols
-            stamp = stamps.next()
-            _append_stamped(matches, matches_path, stamp)
-            # append AFTER the match (the match plan reads the
-            # pre-batch store)
-            _append_stamped(sig_batch, store_path, stamp)
+            ),
+            stamps.next(),
+        )
 
-        stream = spark.readStream.schema(schema).parquet(source_dir)
-        n = _fire(stream, checkpoint, fold)
-        stamps.publish(spark, store_path)
-        # the matches sink gets the same sidecar, published only AFTER
-        # every micro-batch committed, so the fold's safety-lag cutoff
-        # can treat stamps <= this floor as provably fully listed —
-        # closing the starvation window where a backwards NTP step
-        # leaves monotone stamps ahead of wall-clock until the clock
-        # catches up
-        stamps.publish(spark, matches_path)
-    return n
+    return _stamped_ingest(
+        spark, source_dir, store_path, checkpoint, lease_ttl_ms, fold,
+        sidecars=(store_path, matches_path),
+    )
 
 
 def stream_media_dedup_ingest(
@@ -602,52 +561,34 @@ def stream_media_dedup_ingest(
     from etl_pack_spark.operators.cache import pooled_persist
     from etl_pack_spark.operators.multimodal import image_dhash
     from etl_pack_spark.operators.neardup import hamming_match_incremental
-    from etl_pack_spark.sinks.fsio import exists as fs_exists
 
-    schema = spark.read.parquet(source_dir).schema
-    with _stamp_lease(spark, store_path, ttl_ms=lease_ttl_ms):
-        stamps = _MonotoneStamps(spark, store_path)
-
-        def fold(batch_df: DataFrame, batch_id: int) -> None:
-            sess = batch_df.sparkSession
-            media = batch_df.select(
-                F.col(media_id_col).alias("media_id"),
-                F.col(content_col).alias("content"),
-            )
-            # persist the batch signatures: the pixel decode is the
-            # expensive leg and feeds BOTH the match plan and the store
-            # append — it must run once per batch, not twice
-            sig_batch = pooled_persist(
-                image_dhash(media, fake=fake)
-                .where(F.col("dhash").isNotNull())
-                .select(F.col("media_id").alias(media_id_col), "dhash")
-            )
-            if fs_exists(sess, store_path):
-                sig_old = (
-                    resolve_signature_store(sess, store_path, media_id_col)
-                    .drop("__batch")
-                    # replay absorber: a batch whose signatures already
-                    # landed must not self-match against them
-                    .join(sig_batch.select(media_id_col),
-                          media_id_col, "left_anti")
-                )
-            else:
-                sig_old = sig_batch.limit(0)
-            matches = hamming_match_incremental(
+    def fold(batch_df: DataFrame, stamps: _MonotoneStamps) -> None:
+        media = batch_df.select(
+            F.col(media_id_col).alias("media_id"),
+            F.col(content_col).alias("content"),
+        )
+        # persist the batch signatures: the pixel decode is the
+        # expensive leg and feeds BOTH the match plan and the store
+        # append — it must run once per batch, not twice
+        sig_batch = pooled_persist(
+            image_dhash(media, fake=fake)
+            .where(F.col("dhash").isNotNull())
+            .select(F.col("media_id").alias(media_id_col), "dhash")
+        )
+        _fold_signatures(
+            store_path, matches_path, media_id_col, sig_batch,
+            sig_batch.select(media_id_col),
+            lambda sig_old: hamming_match_incremental(
                 sig_batch, sig_old, media_id_col, "dhash",
                 max_hamming=max_hamming,
-            )
-            stamp = stamps.next()
-            _append_stamped(matches, matches_path, stamp)
-            # append AFTER the match (the match plan reads the
-            # pre-batch store)
-            _append_stamped(sig_batch, store_path, stamp)
+            ),
+            stamps.next(),
+        )
 
-        stream = spark.readStream.schema(schema).parquet(source_dir)
-        n = _fire(stream, checkpoint, fold)
-        stamps.publish(spark, store_path)
-        stamps.publish(spark, matches_path)
-    return n
+    return _stamped_ingest(
+        spark, source_dir, store_path, checkpoint, lease_ttl_ms, fold,
+        sidecars=(store_path, matches_path),
+    )
 
 
 def stream_url_dedup_ingest(
@@ -694,49 +635,99 @@ def stream_url_dedup_ingest(
     :func:`stream_neardup_ingest` (r10 ADVICE).
     """
     from etl_pack_spark.operators.urls import dedup_by_url
-    from etl_pack_spark.sinks.fsio import exists as fs_exists
 
+    def fold(batch_df: DataFrame, stamps: _MonotoneStamps) -> None:
+        sess = batch_df.sparkSession
+        batch = dedup_by_url(batch_df, url_col, id_col)
+        with_url = batch.where(F.col("canonical_url").isNotNull())
+        nulls = batch.where(F.col("canonical_url").isNull())
+        # scheme-aware probe: an os.path miss on an object-store
+        # path would re-admit every previously-seen URL
+        if fsio.exists(sess, store_path):
+            store = sess.read.parquet(store_path).select("canonical_url")
+            fresh = with_url.join(store, "canonical_url", "left_anti")
+        else:
+            fresh = with_url
+        # persist: the out-path and store writes below would
+        # otherwise EACH recompute the canonicalize+window lineage
+        # and rescan the persisted store (which grows with every
+        # admitted URL)
+        fresh = fresh.persist()
+        try:
+            # output BEFORE store: a crash between the two re-emits
+            # the batch's survivors on replay (at-least-once output)
+            # instead of silently dropping them (store-first would
+            # anti-join the replay away with nothing written)
+            fresh.unionByName(nulls).write.mode("append").parquet(out_path)
+            winners = fresh.select("canonical_url", F.col(id_col).alias("winner_id"))
+            _append_stamped(winners, store_path, stamps.next())
+        finally:
+            fresh.unpersist()
+
+    return _stamped_ingest(
+        spark, source_dir, store_path, checkpoint, lease_ttl_ms, fold,
+        sidecars=(store_path,),
+    )
+
+
+def _stamped_ingest(
+    spark: SparkSession, source_dir: str, store_path: str, checkpoint: str,
+    lease_ttl_ms: int, fold, sidecars: tuple[str, ...],
+) -> int:
+    """The firing every stamped ingest shares: stream ``source_dir``
+    under ``availableNow`` and run ``fold(batch_df, stamps)`` per
+    micro-batch, all under the store's exclusive lease, then publish
+    the highest emitted stamp next to each path in ``sidecars``.
+    Returns the number of micro-batches.
+
+    ONE FIRING AT A TIME per store, enforced: the lease covers the
+    whole firing, from the sidecar seed to the post-commit publishes,
+    so no concurrent firing can seed from the same sidecar and publish
+    a floor above this firing's still-uncommitted stamps. The stamper
+    is seeded from the store's sidecar, so stamps are monotone by
+    construction, not by trusting the clock. The sidecars are
+    published only AFTER every micro-batch committed, so a fold's
+    safety-lag cutoff can treat stamps <= that floor as provably fully
+    listed — closing the starvation window where a backwards NTP step
+    leaves monotone stamps ahead of wall-clock until the clock catches
+    up."""
     schema = spark.read.parquet(source_dir).schema
     with _stamp_lease(spark, store_path, ttl_ms=lease_ttl_ms):
         stamps = _MonotoneStamps(spark, store_path)
-
-        def fold(batch_df: DataFrame, batch_id: int) -> None:
-            sess = batch_df.sparkSession
-            batch = dedup_by_url(batch_df, url_col, id_col)
-            with_url = batch.where(F.col("canonical_url").isNotNull())
-            nulls = batch.where(F.col("canonical_url").isNull())
-            # scheme-aware probe: an os.path miss on an object-store
-            # path would re-admit every previously-seen URL
-            if fs_exists(sess, store_path):
-                store = sess.read.parquet(store_path).select("canonical_url")
-                fresh = with_url.join(store, "canonical_url", "left_anti")
-            else:
-                fresh = with_url
-            # persist: the out-path and store writes below would
-            # otherwise EACH recompute the canonicalize+window lineage
-            # and rescan the persisted store (which grows with every
-            # admitted URL)
-            fresh = fresh.persist()
-            try:
-                # output BEFORE store: a crash between the two re-emits
-                # the batch's survivors on replay (at-least-once output)
-                # instead of silently dropping them (store-first would
-                # anti-join the replay away with nothing written)
-                fresh.unionByName(nulls).write.mode("append").parquet(out_path)
-                _append_stamped(
-                    fresh.select(
-                        "canonical_url", F.col(id_col).alias("winner_id")
-                    ),
-                    store_path,
-                    stamps.next(),
-                )
-            finally:
-                fresh.unpersist()
-
         stream = spark.readStream.schema(schema).parquet(source_dir)
-        n = _fire(stream, checkpoint, fold)
-        stamps.publish(spark, store_path)
+        n = _fire(stream, checkpoint, lambda batch_df, _: fold(batch_df, stamps))
+        for path in sidecars:
+            stamps.publish(spark, path)
     return n
+
+
+def _fold_signatures(
+    store_path: str, matches_path: str, id_col: str, sig_batch: DataFrame,
+    batch_ids: DataFrame, match, stamp: int,
+) -> None:
+    """One micro-batch of a signature-store ingest: ``match(sig_old)``
+    pairs the batch against the store's latest signatures, then the
+    matches and the batch's signatures ``sig_batch`` are appended
+    under ``stamp``. Store ids in ``batch_ids`` are left out of
+    ``sig_old`` (the replay absorber: a batch whose signatures already
+    landed must not self-match against them). Matches carry the
+    stamp so downstream incremental consumers
+    (:func:`update_cluster_store`) can fold only the not-yet-processed
+    tail."""
+    sess = sig_batch.sparkSession
+    # scheme-aware probe: os.path here read an s3a: store as absent —
+    # EXISTING history silently skipped, missed dedup
+    if fsio.exists(sess, store_path):
+        sig_old = (
+            resolve_signature_store(sess, store_path, id_col)
+            .drop("__batch")
+            .join(batch_ids, id_col, "left_anti")
+        )
+    else:
+        sig_old = sig_batch.limit(0)
+    _append_stamped(match(sig_old), matches_path, stamp)
+    # append AFTER the match (the match plan reads the pre-batch store)
+    _append_stamped(sig_batch, store_path, stamp)
 
 
 def _stamp_sidecar(store_path: str) -> str:
@@ -753,18 +744,14 @@ def _stamp_floor(spark: SparkSession, store_path: str) -> int:
     clock alone, which is the pre-r9 behavior)."""
     import json
 
-    from etl_pack_spark.sinks.fsio import read_text
-
-    raw = read_text(spark, _stamp_sidecar(store_path))
+    raw = fsio.read_text(spark, _stamp_sidecar(store_path))
     return int(json.loads(raw)["last_stamp"]) if raw is not None else 0
 
 
 def _publish_stamp(spark: SparkSession, store_path: str, stamp: int) -> None:
     import json
 
-    from etl_pack_spark.sinks.fsio import write_text
-
-    write_text(
+    fsio.write_text(
         spark, _stamp_sidecar(store_path), json.dumps({"last_stamp": int(stamp)})
     )
 
@@ -814,21 +801,18 @@ def _reclaim_stale(spark: SparkSession, store_path: str, lease: str,
     cleanly or loses loudly at the read-back."""
     import json
 
-    from etl_pack_spark.sinks.fsio import create_exclusive, read_text
-    from etl_pack_spark.sinks.fsio import delete as fs_delete
-
-    current = read_text(spark, lease)
+    current = fsio.read_text(spark, lease)
     if current is not None and current != judged_raw:
         raise RuntimeError(
             f"lost the race re-acquiring a stale ingest lease on "
             f"{store_path!r} — another firing already replaced it"
         )
     if current is not None:
-        fs_delete(spark, lease)
-    create_exclusive(spark, lease, payload)
+        fsio.delete(spark, lease)
+    fsio.create_exclusive(spark, lease, payload)
     # VERIFY we are the holder (two overtakers can both pass the
     # create on stores without atomic create-if-absent)
-    back = read_text(spark, lease)
+    back = fsio.read_text(spark, lease)
     try:
         winner = json.loads(back)["token"]
     except (TypeError, ValueError, KeyError):
@@ -892,9 +876,6 @@ def _stamp_lease(spark: SparkSession, store_path: str,
     import time as _time
     import uuid as _uuid
 
-    from etl_pack_spark.sinks.fsio import create_exclusive, mtime_ms, read_text
-    from etl_pack_spark.sinks.fsio import delete as fs_delete
-
     lease = _lease_path(store_path)
     token = _uuid.uuid4().hex
     now_ms = int(_time.time() * 1000)
@@ -912,15 +893,15 @@ def _stamp_lease(spark: SparkSession, store_path: str,
             "remove the lease file if the holder is known dead"
         )
 
-    if not create_exclusive(spark, lease, payload):
-        raw = read_text(spark, lease)
+    if not fsio.create_exclusive(spark, lease, payload):
+        raw = fsio.read_text(spark, lease)
         try:
             age = now_ms - int(json.loads(raw)["acquired_at_ms"])
         except (TypeError, ValueError, KeyError):
             # unreadable payload: NOT stale-by-default — judge by the
             # file's own age (a zero-byte lease is a live holder's
             # create-to-write window until proven old)
-            mt = mtime_ms(spark, lease)
+            mt = fsio.mtime_ms(spark, lease)
             age = (now_ms - mt) if mt is not None else ttl_ms + 1
         if age <= ttl_ms:
             raise held_error(age)
@@ -932,13 +913,13 @@ def _stamp_lease(spark: SparkSession, store_path: str,
         # release ONLY if still ours: if this firing overran ttl_ms
         # and was overtaken, deleting unconditionally would free the
         # NEW holder's lease for a third firing
-        raw = read_text(spark, lease)
+        raw = fsio.read_text(spark, lease)
         try:
             owner = json.loads(raw)["token"]
         except (TypeError, ValueError, KeyError):
             owner = None
         if owner == token:
-            fs_delete(spark, lease)
+            fsio.delete(spark, lease)
 
 
 class _MonotoneStamps:
@@ -992,9 +973,7 @@ def compaction_watermark(spark: SparkSession, store_path: str) -> int | None:
     a perf regression indistinguishable from correct behavior."""
     import json
 
-    from etl_pack_spark.sinks.fsio import read_text
-
-    raw = read_text(spark, f"{store_path.rstrip('/')}/{COMPACTION_MARKER}")
+    raw = fsio.read_text(spark, f"{store_path.rstrip('/')}/{COMPACTION_MARKER}")
     if raw is None:
         return None
     return int(json.loads(raw)["compacted_through_batch"])
@@ -1009,9 +988,7 @@ def _write_compaction_marker(
     does not yet contain would corrupt every read)."""
     import json
 
-    from etl_pack_spark.sinks.fsio import write_text
-
-    write_text(
+    fsio.write_text(
         spark,
         f"{staged.rstrip('/')}/{COMPACTION_MARKER}",
         json.dumps({"compacted_through_batch": int(watermark)}),
@@ -1195,8 +1172,6 @@ def update_cluster_store(
         connected_components,
         update_clusters,
     )
-    from etl_pack_spark.sinks.fsio import exists as fs_exists
-    from etl_pack_spark.sinks.fsio import read_text, write_text
 
     with _stamp_lease(spark, clusters_path, ttl_ms=lease_ttl_ms):
         # the sidecar floor MUST be read BEFORE the matches listing (the
@@ -1210,7 +1185,7 @@ def update_cluster_store(
             _stamp_floor(spark, matches_path) if safety_lag_ms > 0 else 0
         )
         matches = _read_stamped(spark, matches_path)
-        raw = read_text(spark, _clusters_fold_marker(clusters_path))
+        raw = fsio.read_text(spark, _clusters_fold_marker(clusters_path))
         folded_through = (
             int(json.loads(raw)["folded_through_batch"])
             if raw is not None else None
@@ -1241,7 +1216,7 @@ def update_cluster_store(
             # scheme-aware probe: os.path here read an s3a: clusters
             # store as absent, so every firing relabeled from ONLY the
             # new tail and the history-blind labels won latest-wins
-            exists = fs_exists(spark, clusters_path)
+            exists = fsio.exists(spark, clusters_path)
             if agg["n"] == 0:
                 # nothing new: the store (possibly absent) is untouched —
                 # and the default return does NOT resolve it (delta = 0)
@@ -1276,7 +1251,7 @@ def update_cluster_store(
             finally:
                 delta.unpersist(False)
             # marker AFTER the append (see crash-safety note above)
-            write_text(
+            fsio.write_text(
                 spark,
                 _clusters_fold_marker(clusters_path),
                 json.dumps({"folded_through_batch": int(agg["wm"])}),

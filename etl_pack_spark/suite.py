@@ -356,21 +356,6 @@ def q_tpch_q5_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_cluster_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMeans clustering over the embedding column (pyspark.ml, fixed
-    seed). Iterative algorithm → rows-only check; the test asserts
-    cluster count and determinism within a session."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", array_to_vector(F.col("embedding")).alias("features"))
-    model = KMeans(k=10, seed=42, maxIter=10).fit(vecs)
-    return model.transform(vecs).select(
-        "vec_id", F.col("prediction").alias("cluster")
-    )
-
-
 def q_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style continuous aggregate at two resolutions in one
     pass: GROUPING SETS over (day, hour) and (day) buckets. The `res`

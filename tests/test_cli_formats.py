@@ -1,4 +1,4 @@
-"""CLI transfer runner, format-agnostic sources, stateful streaming."""
+"""CLI transfer runner and format-agnostic sources."""
 
 from __future__ import annotations
 
@@ -69,41 +69,6 @@ def test_read_source_csv_json_roundtrip(spark, sf_dir, tmp_path):
 def test_read_source_rejects_unknown_format(spark):
     with pytest.raises(ValueError, match="unsupported format"):
         read_source(spark, "/tmp/x", "avrox")
-
-
-def test_stateful_running_totals(spark, sf_dir, tmp_path):
-    """applyInPandasWithState over a real stream: totals accumulate
-    across micro-batches and equal the batch ground truth."""
-    from pyspark.sql import functions as F
-
-    from etl_pack_spark.streaming.incremental import _events_stream
-    from etl_pack_spark.streaming.stateful import running_user_totals
-
-    src = f"{sf_dir}/events.parquet"
-    stream = _events_stream(spark, src)
-    q = (
-        # no eviction: bounded replay should drain and terminate (the
-        # timer path is covered by test_stateful_idle_timeout_evicts_state)
-        running_user_totals(stream, idle_timeout_ms=None)
-        .writeStream.outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .format("memory").queryName("totals")
-        .start()
-    )
-    q.awaitTermination()
-    got = {r["user_id"]: (r["n_events"], round(r["sum_value"], 2))
-           for r in spark.sql(
-               "SELECT user_id, n_events, sum_value FROM ("
-               "  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id "
-               "                               ORDER BY n_events DESC) AS rk FROM totals"
-               ") WHERE rk = 1"
-           ).collect()}
-    events = spark.read.parquet(src)
-    expect = {r["user_id"]: (r["n"], round(r["s"], 2))
-              for r in events.groupBy("user_id")
-              .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s")).collect()}
-    assert got == expect
 
 
 def test_read_source_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):

@@ -25,37 +25,6 @@ def test_curate_single_scan_single_shuffle(spark, sf_dir):
     assert plan.count("Exchange") == 1
 
 
-def test_curate_pack_composition(spark, sf_dir):
-    """curate → decontaminate → pack end-to-end: train docs packed
-    within budget, non-train unpacked, decontaminated docs gone."""
-    from pyspark.sql import functions as F
-
-    from etl_pack_spark.plans.curate import curate_pack_corpus
-
-    docs = read_table(spark, sf_dir, "documents")
-    # eval set = 5 curated docs: these must disappear from the output
-    evald = docs.where(F.col("doc_id").isin([0, 1, 2, 3, 4])).select("doc_id", "text")
-    out = curate_pack_corpus(docs, eval_df=evald, budget=512, shards=4)
-    rows = out.collect()
-    assert len(rows) > 0
-    by_split = {}
-    for r in rows:
-        by_split.setdefault(r["split"], []).append(r)
-    # train rows are packed, others are not
-    assert all(r["pack_id"] is not None for r in by_split.get("train", []))
-    for s in ("val", "test"):
-        assert all(r["pack_id"] is None for r in by_split.get(s, []))
-    # budget respected over non-oversize packs
-    fills = {}
-    for r in by_split.get("train", []):
-        if not r["oversize"]:
-            fills[r["pack_id"]] = fills.get(r["pack_id"], 0) + r["n_tokens"]
-    assert fills and max(fills.values()) <= 512
-    # the planted eval docs were decontaminated away
-    got_ids = {r["doc_id"] for r in rows}
-    assert got_ids.isdisjoint({0, 1, 2, 3, 4})
-
-
 def test_curate_disposition_audit_grain(spark, sf_dir):
     """r10: every document classified; the kept slice IS curate_corpus;
     exact-dup attribution names the non-winning copies; the funnel

@@ -76,6 +76,32 @@ def test_posix_path_colon_and_uri_metachars_are_plain_path_chars():
     assert posix_path("file:/tmp/report?v=2#frag") == "/tmp/report?v=2#frag"
 
 
+def test_local_parquet_files_file_uri_host_is_not_local(tmp_path):
+    """``"file:/" + "/tmp/..."`` is ``file://tmp/...``: ``tmp`` is the
+    URI's host, so the path is not the local directory ``/tmp/...``
+    and the footer opener declines it (no JVM: a ``file:`` path never
+    reads the session's default filesystem)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_pack_spark.sources.reader import _local_parquet_files
+
+    pq.write_table(pa.table({"x": [1]}), str(tmp_path / "part-0.parquet"))
+    assert _local_parquet_files(None, f"file:{tmp_path}") == [
+        str(tmp_path / "part-0.parquet")
+    ]
+    assert _local_parquet_files(None, "file:/" + str(tmp_path)) is None
+
+
+def test_compact_partitions_rejects_a_remote_root():
+    """The partition swap is a POSIX rename, so a remote root fails at
+    entry (no JVM) instead of walking nothing."""
+    from etl_pack_spark.sinks.compaction import compact_partitions
+
+    with pytest.raises(NotImplementedError):
+        compact_partitions(None, "s3a://b/t")
+
+
 def test_neardup_ingest_store_probe_is_scheme_aware(spark, tmp_path):
     """Two ingest firings against a ``file:``-scheme signature store:
     the second MUST match against the first's history. Pre-r9,
@@ -169,26 +195,6 @@ def test_run_transfer_target_probe_is_scheme_aware(spark, tmp_path, sf_dir):
     r2 = run_transfer(spark, cfg)
     assert r1.rows > 0 and r2.rows == 0
     assert spark.read.parquet(cfg.target_path).count() == r1.rows
-
-
-def test_refresh_rollup_file_scheme_and_object_store_guard(spark, tmp_path):
-    """refresh_rollup normalizes ``file:`` URIs (its swap is an
-    os.replace rename) and fails LOUDLY on object-store schemes
-    instead of silently dropping rollup history."""
-    from etl_pack_spark.plans.incremental_agg import AggSpec, refresh_rollup
-
-    spec = AggSpec(group_cols=["k"], sum_cols=["v"])
-    inc = spark.createDataFrame([(1, 10.0), (2, 5.0)], "k int, v double")
-    path = f"file:{tmp_path}/rollup"
-    assert refresh_rollup(spark, inc, path, spec) == 2
-    # second increment must MERGE with the existing rollup, which
-    # requires the file:-scheme existence check to answer True
-    assert refresh_rollup(spark, inc, path, spec) == 2
-    got = {(r["k"], r["n_rows"]) for r in
-           spark.read.parquet(str(tmp_path / "rollup")).collect()}
-    assert got == {(1, 2), (2, 2)}
-    with pytest.raises(NotImplementedError):
-        refresh_rollup(spark, inc, "s3a://bucket/rollup", spec)
 
 
 def test_stream_incremental_transfer_file_scheme_target(spark, tmp_path, sf_dir):

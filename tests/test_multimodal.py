@@ -91,17 +91,6 @@ def test_decode_fake_deterministic(spark, sf_dir):
     assert all(c == 3 for _, _, c in rows.values())
 
 
-def test_frame_sampling_offsets(spark, sf_dir):
-    frames = multimodal.sample_frames(_media(spark, sf_dir).limit(5), every_n_bytes=32, fake=True)
-    per_doc = frames.groupBy("media_id").agg(
-        F.count(F.lit(1)).alias("n"), F.max("offset").alias("mx")
-    ).collect()
-    media_len = {r["media_id"]: r["n_bytes"] for r in _media(spark, sf_dir).limit(5).collect()}
-    for r in per_doc:
-        expect = (media_len[r["media_id"]] + 31) // 32
-        assert r["n"] == expect
-
-
 def test_resize_real_quarantines_non_png(spark, sf_dir):
     """fake=False decodes PNGs for real now; a non-PNG non-JPEG payload
     (the documents fixture is text bytes) yields a NULL row instead of
@@ -320,7 +309,6 @@ def test_string_media_id_across_operators(spark):
         multimodal.decode_image(media, fake=True),
         multimodal.byte_histogram(media),
         multimodal.decode_frames(media, fake=True),
-        multimodal.sample_frames(media, fake=True),
         multimodal.resize_image(media, fake=True),
         multimodal.media_features(media, fake=True, passthrough=["mime"]),
     ]:

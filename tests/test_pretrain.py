@@ -54,12 +54,24 @@ def test_pipeline_stages_monotone_and_effective(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     evald = docs.where(F.col("doc_id") % 10 == 7).select("doc_id", "text")
     base = prepare_pretraining_corpus(docs)
-    decon = prepare_pretraining_corpus(docs, eval_df=evald)
+    # a non-default budget: packing assigns packs, it drops no document
+    decon = prepare_pretraining_corpus(docs, eval_df=evald, budget=512).collect()
     base_ids = {r["doc_id"] for r in base.select("doc_id").distinct().collect()}
-    decon_ids = {r["doc_id"] for r in decon.select("doc_id").distinct().collect()}
+    decon_ids = {r["doc_id"] for r in decon}
     # decontamination only removes docs, and removes at least one
     # (the fixture's near-dups straddle the doc_id % 10 == 7 split)
     assert decon_ids < base_ids
+    # the eval docs themselves are gone, and some of them were kept
+    # without decontamination
+    assert any(i % 10 == 7 for i in base_ids)
+    assert not any(i % 10 == 7 for i in decon_ids)
+    # every row is packed, and the budget bounds every non-oversize pack
+    assert all(r["pack_id"] is not None for r in decon)
+    fills = {}
+    for r in decon:
+        if not r["oversize"]:
+            fills[r["pack_id"]] = fills.get(r["pack_id"], 0) + r["n_tokens"]
+    assert fills and max(fills.values()) <= 512
 
 
 def test_pipeline_deterministic_under_repartition(spark, sf_dir):

@@ -53,7 +53,7 @@ def test_repetition_ratio(spark):
         "doc_id int, text string",
     )
     rows = {r["doc_id"]: r for r in
-            textops.repetition_ratio(df, "doc_id", "text").collect()}
+            textops.quality_signals(df, "doc_id", "text").collect()}
     assert rows[1]["repetition"] > 0.8   # 6 identical 3-grams
     assert rows[2]["repetition"] == 0.0  # all 3-grams unique
 

@@ -1,4 +1,4 @@
-"""Inverted-index / TF-IDF / BM25 retrieval operators.
+"""Inverted-index / term-stats / BM25 retrieval operators.
 
 Integer posting statistics (tf, df, dl) are hash-exact against the
 DuckDB twins; BM25 scores involve ``ln`` (libm last-bit differences),
@@ -20,7 +20,6 @@ from etl_pack_spark.operators.retrieval import (
     build_postings,
     build_postings_sql,
     term_stats,
-    tfidf_weights,
 )
 from etl_pack_spark.sources.reader import read_table
 
@@ -81,17 +80,6 @@ def test_postings_oracle_parity(spark, sf_dir):
     assert got == want
 
 
-def test_tfidf_weights_formula(tiny):
-    w = {
-        (r["id"], r["term"]): r["weight"]
-        for r in tfidf_weights(tiny, "doc_id", "text").collect()
-    }
-    idf_cat = math.log(1 + 2.5 / 2.5)
-    # doc 3 has tf=3 for cat → (1 + ln 3) * idf
-    assert w[(3, "cat")] == pytest.approx((1 + math.log(3)) * idf_cat, rel=1e-9)
-    assert w[(1, "cat")] == pytest.approx(idf_cat, rel=1e-9)
-
-
 def test_bm25_ranking_properties(tiny):
     # query "cat": doc 3 (tf=3, short) must outrank doc 1 (tf=1, long)
     top = bm25_topk(tiny, "doc_id", "text", "cat", k=10).collect()
@@ -145,21 +133,6 @@ def _clear_cache_pool(spark):
     for k in list(_POOL):
         _POOL.pop(k).unpersist(False)
     spark.catalog.clearCache()
-
-
-def test_tfidf_postings_built_once(tiny):
-    """r11 sweep of the multi-consumer lineage trap: tfidf_weights'
-    postings feed the idf aggregation AND the weight join — the same
-    double-corpus-scan shape the BM25 forms carried. Pinned exactly
-    like the bm25 plan checks: both consumers must read the cache."""
-    _clear_cache_pool(tiny.sparkSession)
-    plan = (
-        tfidf_weights(tiny, "doc_id", "text")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("InMemoryTableScan") == 2, plan
 
 
 def test_bm25_single_query_postings_built_once(tiny):

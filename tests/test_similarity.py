@@ -128,23 +128,6 @@ def test_semantic_dedup_repartition_stable(spark, sf_dir):
     assert a == b
 
 
-def test_kmeans_cluster_embeddings_pin(spark, sf_dir):
-    """The iterative KMeans path (retired from the driver registry when
-    semantic_dedup took the slot) stays pinned: fixed seed, k clusters,
-    every vector assigned, deterministic within a session."""
-    from etl_pack_spark.suite import q_cluster_embeddings
-
-    out = q_cluster_embeddings(spark, sf_dir).toPandas()
-    n = read_table(spark, sf_dir, "embeddings").count()
-    assert len(out) == n
-    assert out["vec_id"].nunique() == n
-    assert 1 < out["cluster"].nunique() <= 10
-    again = q_cluster_embeddings(spark, sf_dir).toPandas()
-    assert sorted(map(tuple, out.values.tolist())) == sorted(
-        map(tuple, again.values.tolist())
-    )
-
-
 def test_lsh_neardup_oracle_parity(spark, sf_dir):
     """The hyperplane-LSH pair set matches the DuckDB twin bit-exactly:
     md5-derived hyperplane coefficients are dyadic rationals, the

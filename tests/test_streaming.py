@@ -112,58 +112,6 @@ def test_dedup_stream_batch_mode(spark, sf_dir):
 
 
 @pytest.mark.slow
-def test_stateful_idle_timeout_evicts_state(spark, tmp_path):
-    """A key idle past the timeout is evicted: its next appearance
-    restarts from zero instead of continuing the old total. Three
-    single-file micro-batches — user 7, then only user 8 (user 7's
-    1 ms idle timer expires), then user 7 again."""
-    import time
-
-    import pandas as pd
-
-    from etl_pack_spark.streaming.stateful import running_user_totals
-
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    base = pd.Timestamp("2024-01-01 00:00:00")
-    for i, uid in enumerate([7, 8, 7]):
-        pdf = pd.DataFrame(
-            {"user_id": [uid], "value": [1.0], "ts": [base + pd.Timedelta(seconds=i)]}
-        )
-        spark.createDataFrame(pdf).coalesce(1).write.parquet(str(src / f"f{i}"))
-        time.sleep(1.1)  # distinct mtimes -> deterministic batch order
-
-    stream = (
-        spark.readStream.schema("user_id long, value double, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    q = (
-        running_user_totals(stream, idle_timeout_ms=1)
-        .writeStream.outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .format("memory").queryName("evict_totals")
-        .start()
-    )
-    # processing-time timers keep an availableNow query alive with
-    # timer-check batches after the data drains (see running_user_totals
-    # docstring) — bound the wait, then poll for the expected emissions
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        rows = spark.sql("SELECT * FROM evict_totals WHERE user_id = 7").collect()
-        if len(rows) >= 3:
-            break
-        time.sleep(1)
-    q.stop()
-    rows = spark.sql("SELECT * FROM evict_totals WHERE user_id = 7").collect()
-    # state was evicted between the two user-7 batches: every emission
-    # has n_events=1; without eviction the third batch would emit n=2
-    assert len(rows) >= 2
-    assert {r["n_events"] for r in rows} == {1}, rows
-
-
-@pytest.mark.slow
 def test_stateless_operators_run_under_readstream(spark, sf_dir, tmp_path):
     """Map-only operators (text_signals, c4_clean) are streaming-ready
     with NO changes: the same DataFrame transform applied to a

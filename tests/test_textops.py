@@ -29,7 +29,7 @@ def test_language_id(spark):
 
 def test_quality_metrics(spark):
     rows = {r["doc_id"]: r for r in
-            textops.quality_metrics(_df(spark), "doc_id", "text").collect()}
+            textops.quality_signals(_df(spark), "doc_id", "text").collect()}
     r4 = rows[4]
     assert r4["n_chars"] == len("Hello, world!! How are you today?")
     assert r4["n_tokens"] == 6
